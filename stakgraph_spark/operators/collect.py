@@ -42,6 +42,7 @@ CAMEL_RE = r"\b[A-Z][a-z0-9]+[A-Z][A-Za-z0-9]*\b"
 # declared var name is q_<tool> (one var per tool's parameter,
 # get_vars analog over this corpus's only assignment form).
 VARDECL_RE = r"tool:([a-z]+)\(q="
+VAR_PREFIX = "q_"
 
 # Return section: everything after '->' (the function signature's
 # return-type region, RETURN_TYPES capture analog).
@@ -86,7 +87,7 @@ def extract_var_defs(transcripts: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         F.explode(F.regexp_extract_all("text", F.lit(VARDECL_RE), 1)).alias("tool"),
-    ).selectExpr("conv_id", "turn_idx", "'q_' || tool AS vname")
+    ).selectExpr("conv_id", "turn_idx", f"'{VAR_PREFIX}' || tool AS vname")
 
 
 def bucket_first_var_defs(transcripts: DataFrame) -> DataFrame:
@@ -166,33 +167,6 @@ def var_usage_edges_extracted(transcripts: DataFrame) -> DataFrame:
             " OR (ubucket = vbucket)"     # tier 3: same directory
         )
         .select("conv_id", "turn_idx", "vname", "d_conv", "d_turn")
-        .distinct()
-    )
-
-
-def var_usage_edges_dictionary(resolved: DataFrame, ent_nodes: DataFrame) -> DataFrame:
-    """The same tier cascade for DICTIONARY-resident Var entities
-    (file='entities'): a turn's resolved mention of a Var-typed
-    entity is accepted iff
-      tier 1  same file — structurally false ('entities' is not a
-              conversation file);
-      tier 2  imported — the var entity is in the conversation's
-              import set (the entities its turn 0 mentions, the
-              file_imports analog the IMPORTS edges are built from);
-      tier 3  same directory — structurally false ('entities' has no
-              bucket).
-    -> (conv_id, turn_idx, var_key). Co-partitioned semi-join on
-    (conv_id, entity_id); the Var dim is broadcast."""
-    var_dim = F.broadcast(
-        ent_nodes.where(F.col("node_type") == "Var").select(
-            F.col("start").alias("entity_id"), F.col("node_key").alias("var_key")
-        )
-    )
-    var_mentions = resolved.join(var_dim, "entity_id")
-    conv_imports = resolved.where(F.col("turn_idx") == 0).select("conv_id", "entity_id").distinct()
-    return (
-        var_mentions.join(conv_imports, ["conv_id", "entity_id"], "left_semi")  # tier 2
-        .select("conv_id", "turn_idx", "var_key")
         .distinct()
     )
 

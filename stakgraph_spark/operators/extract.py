@@ -88,23 +88,13 @@ def extract_requests(transcripts: DataFrame, pack: dict | None = None) -> DataFr
     transcriptish dialect's own style; the reference's linker has no
     such rule, which is exactly why it belongs in pack data rather
     than the engine). pack=None keeps the transcriptish default:
-    numseg + the full chain. The result turns the reference's O(n*m)
-    nested-loop request/endpoint matching (linker.rs:151-159) into a
-    partitioned equi-join on (verb, n_segments) with the paths_match
-    residual; concrete-vs-:param segment matching is exercised by the
+    numseg + the full chain. The build matches requests to endpoints
+    with the same rendering (materialize.turn_facts: a filter over
+    the endpoint array on verb, segment count and paths_match);
+    concrete-vs-:param segment matching is exercised by the
     kg_paths_match planted-dim query.
     """
-    from ..functions.paths import normalize_backend_path_sql
-
-    styles, numseg = None, True
-    if pack is not None and pack.get("request_styles") is not None:
-        st = list(pack["request_styles"])
-        numseg = "numseg" in st
-        styles = [s for s in st if s != "numseg"]
-    inner = (
-        f"regexp_replace(path, '{NUMSEG_RE}', '/:param')" if numseg else "path"
-    )
-    norm = normalize_backend_path_sql(inner, "spark", styles=styles)
+    norm = norm_path_sql("path", pack)
     # every "VERB /path" match contains ' /' — zero-alloc guard
     return transcripts.where(F.col("text").contains(" /")).selectExpr(
         "conv_id",
@@ -116,6 +106,21 @@ def extract_requests(transcripts: DataFrame, pack: dict | None = None) -> DataFr
         "split_part(m, ' ', 1) AS verb",
         "split_part(m, ' ', 2) AS path",
     ).selectExpr("conv_id", "turn_idx", "verb", "path", f"{norm} AS norm_path")
+
+
+def norm_path_sql(path: str, pack: dict | None = None) -> str:
+    """Spark SQL: the normalize_backend_path rewrite of the request
+    path expression `path` under the pack's request_styles (see
+    extract_requests); one rendering for every consumer."""
+    from ..functions.paths import normalize_backend_path_sql
+
+    styles, numseg = None, True
+    if pack is not None and pack.get("request_styles") is not None:
+        st = list(pack["request_styles"])
+        numseg = "numseg" in st
+        styles = [s for s in st if s != "numseg"]
+    inner = f"regexp_replace({path}, '{NUMSEG_RE}', '/:param')" if numseg else path
+    return normalize_backend_path_sql(inner, "spark", styles=styles)
 
 
 def extract_test_refs(transcripts: DataFrame) -> DataFrame:

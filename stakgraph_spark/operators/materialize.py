@@ -19,6 +19,31 @@ Identity follows the reference exactly: node_key recipe
 edge write is CREATE not MERGE (neo4j_utils.rs:169-175), so dedup
 MUST happen here.
 
+Plan shape. Every edge family that reads turn text comes out of ONE
+per-turn fact table (`turn_facts`), computed in a single pass over
+`transcripts`: the regex extractions, the tiered mention resolution
+(link.py's scorer, evaluated with the conversation-level evidence
+from one window over conv_id), the tool, request->endpoint, test-ref,
+var-use and return-type lookups. The static dictionary (entity keys,
+canonical map, alias candidates, tool/Datamodel names, endpoint
+templates) enters as SQL map/array literals evaluated inside that
+projection, so no dictionary join, broadcast or LocalTableScan
+remains on the turn path.
+
+  local_edges    the 13 bucket-local families: one explode of an
+                 array<struct<edge_type, source_key, target_key>> per
+                 turn, deduped once on (conv_id, edge) — map-side
+                 under the conv_id partitioning, no shuffle.
+  global_picks   the cross-conversation picks (role and bucket
+                 strata, bucket-first var definitions, first/last
+                 request per endpoint) as ONE aggregate.
+  global_edges   families of the picks and of first_def, plus the
+                 per-turn test-ref / var-use families joined to them
+                 (one broadcast), plus the static dictionary edges.
+
+Nodes use the same split: local_nodes (conversation rollups, turns,
+requests) and global_nodes (picks, first_def, static dictionary).
+
 Node vocabulary — all 19 reference NodeTypes (mod.rs:27-50):
   Repository corpus root          Language   role stratum (repo.rs:215-300 analog)
   Directory  conversation bucket  File       conversation
@@ -64,13 +89,16 @@ Edge vocabulary — all 12 reference EdgeTypes (mod.rs:71-88):
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.keys import node_key, node_key_py, node_key_sql
+from ..functions.keys import node_key_py, node_key_sql
+from ..functions.paths import _pat, n_segments_sql, paths_match_sql
 from ..sources import entities as E
-from . import canon as canon_op
 from . import extract as X
+from .collect import CAMEL_RE, CAPIDENT_RE, RETURN_SECTION_SQL, VAR_PREFIX, VARDECL_RE
 
 REPO_KEY = "repository-corpus-corpus-0"
 MAX_FILE_SIZE = 500_000  # builder/utils.rs:9 — body dropped above, node kept
@@ -79,8 +107,7 @@ NULL_S = "CAST(NULL AS STRING)"
 
 # Key expressions are built as SQL strings (one F.expr bridge call)
 # rather than nested Column ops: the sandbox py4j bridge costs ~6ms
-# per Column call, and node_key expands to ~16 nested calls — across
-# the 20+ edge/node families that is seconds of pure driver latency.
+# per Column call, and node_key expands to ~16 nested calls.
 
 def _conv_key_sql(conv: str) -> str:
     return node_key_sql("'File'", conv, f"'corpus/' || {conv}", "0", "spark")
@@ -150,9 +177,9 @@ def _test_key_sql(tid: str, conv: str, turn: str, pack: dict | None = None) -> s
     )
 
 
-def _request_key_sql(conv: str, turn: str) -> str:
+def _request_key_sql(conv: str, turn: str, path: str = "path", verb: str = "verb") -> str:
     return node_key_sql(
-        "'Request'", "path", f"'corpus/' || {conv}", turn, "spark", verb="verb"
+        "'Request'", path, f"'corpus/' || {conv}", turn, "spark", verb=verb
     )
 
 
@@ -176,7 +203,7 @@ def all_entities(spark: SparkSession) -> DataFrame:
     )
 
 
-_ENTITY_NODES_CACHE: dict = {}
+_STATIC_CACHE: dict = {}
 
 
 def _canon_parent() -> dict[int, int]:
@@ -233,83 +260,306 @@ def entity_nodes(spark: SparkSession) -> DataFrame:
     The dictionary is STATIC driver data (Python lists in
     sources/entities.py), so this is computed entirely on the driver
     — union-find over SAME_AS plus the node_key recipe — and handed
-    to Spark as one LocalRelation: zero Spark jobs, broadcastable
-    as-is. The distributed canonical_map operator exists for
-    dictionaries that are themselves tables (and is exercised by
-    tests/bench); routing 28 static rows through it costs seconds of
-    task-scheduling per session for no data.
+    to Spark as one VALUES relation. The distributed canonical_map
+    operator exists for dictionaries that are themselves tables (and
+    is exercised by tests); routing 28 static rows through it costs
+    seconds of task-scheduling per session for no data.
     """
-    key = (spark.sparkContext.applicationId, "ents")
-    if key in _ENTITY_NODES_CACHE:
-        return _ENTITY_NODES_CACHE[key]
-    lit = spark.createDataFrame(
-        _entity_rows(),
+    return _local_relation(
+        spark, "ents", _entity_rows(),
         "node_key STRING, node_type STRING, name STRING, file STRING, "
         "start INT, canon_id INT, data_type STRING, meta STRING",
     )
-    _ENTITY_NODES_CACHE[key] = lit
-    return lit
 
 
-def instance_nodes(spark: SparkSession) -> DataFrame:
-    """Instance nodes — one per alias row of a Class-typed entity
-    (reference Instance extraction, collect.rs:22-23), carrying the
-    class name as data_type (asg.rs:73). start = the alias row's
-    dictionary line so sanitize-colliding aliases ('order-service'
-    vs 'orderservice') and shared aliases ('core') keep distinct
-    keys."""
-    key = (spark.sparkContext.applicationId, "inst")
-    if key in _ENTITY_NODES_CACHE:
-        return _ENTITY_NODES_CACHE[key]
-    rows = [
+def _static_node_rows() -> list[tuple]:
+    """The Repository root plus one Instance per alias row of a
+    Class-typed entity (reference Instance extraction,
+    collect.rs:22-23), carrying the class name as data_type
+    (asg.rs:73). start = the alias row's dictionary line so
+    sanitize-colliding aliases ('order-service' vs 'orderservice') and
+    shared aliases ('core') keep distinct keys.
+    -> (node_key, node_type, name, file, start, data_type, meta)."""
+    return [(REPO_KEY, "Repository", "corpus", "corpus", 0, None, "")] + [
         (node_key_py("Instance", alias, "entities", line), "Instance", alias,
-         "entities", line, eid, cls, "")
-        for eid, line, alias, cls in E.instances()
+         "entities", line, cls, "")
+        for _eid, line, alias, cls in E.instances()
     ]
-    lit = spark.createDataFrame(
-        rows,
-        "node_key STRING, node_type STRING, name STRING, file STRING, "
-        "start INT, entity_id INT, data_type STRING, meta STRING",
-    )
-    _ENTITY_NODES_CACHE[key] = lit
-    return lit
 
 
-def static_edges(spark: SparkSession) -> DataFrame:
-    """Dictionary-derived edge families, computed on the driver
-    (static data -> one LocalRelation, zero Spark jobs):
+def _static_edge_rows() -> list[tuple[str, str, str]]:
+    """Dictionary-derived edge families, computed on the driver:
 
       OF         Instance -> its Class (mod.rs:168-174)
+      OF         alias-member entity -> canonical entity (the
+                 canonicalization collapse; add_instances analog)
       PARENT_OF  parent Class -> child Class (array_graph.rs:229-246)
       IMPORTS    including Class -> included Class (array_graph.rs:247-266)
       OPERAND    Class/Trait -> Function entity (mod.rs:197-203)
       IMPLEMENTS Class -> Trait (collect.rs:60-81)
     """
-    key = (spark.sparkContext.applicationId, "sedges")
-    if key in _ENTITY_NODES_CACHE:
-        return _ENTITY_NODES_CACHE[key]
-    types = {i: t for i, _, t in E.ENTITIES}
-    names = {i: n for i, n, _ in E.ENTITIES}
-
-    def ekey(i: int) -> str:
-        return node_key_py(types[i], names[i], "entities", i)
-
+    ents = _entity_rows()
+    key = {r[4]: r[0] for r in ents}
     rows: list[tuple[str, str, str]] = []
     for eid, line, alias, _cls in E.instances():
-        rows.append(("OF", node_key_py("Instance", alias, "entities", line), ekey(eid)))
-    for parent, child in E.PARENT_OF_PAIRS:
-        rows.append(("PARENT_OF", ekey(parent), ekey(child)))
-    for src, dst in E.CLASS_IMPORTS_PAIRS:
-        rows.append(("IMPORTS", ekey(src), ekey(dst)))
-    for src, dst in E.OPERAND_PAIRS:
-        rows.append(("OPERAND", ekey(src), ekey(dst)))
-    for src, dst in E.IMPLEMENTS_PAIRS:
-        rows.append(("IMPLEMENTS", ekey(src), ekey(dst)))
-    lit = spark.createDataFrame(
-        rows, "edge_type STRING, source_key STRING, target_key STRING"
+        rows.append(("OF", node_key_py("Instance", alias, "entities", line), key[eid]))
+    for r in ents:
+        if r[5] != r[4]:
+            rows.append(("OF", r[0], key[r[5]]))
+    for etype, pairs in (
+        ("PARENT_OF", E.PARENT_OF_PAIRS),
+        ("IMPORTS", E.CLASS_IMPORTS_PAIRS),
+        ("OPERAND", E.OPERAND_PAIRS),
+        ("IMPLEMENTS", E.IMPLEMENTS_PAIRS),
+    ):
+        rows.extend((etype, key[src], key[dst]) for src, dst in pairs)
+    return rows
+
+
+def _local_relation(spark: SparkSession, name: str, rows: list[tuple], schema: str) -> DataFrame:
+    """A static driver table as a VALUES relation (real size stats, no
+    tasks to schedule), memoized per session."""
+    key = (spark.sparkContext.applicationId, name)
+    if key not in _STATIC_CACHE:
+        cols, types = zip(*(c.split() for c in schema.split(", ")))
+        _STATIC_CACHE[key] = E._values_df(spark, rows, list(cols), list(types))
+    return _STATIC_CACHE[key]
+
+
+def static_edges(spark: SparkSession) -> DataFrame:
+    """(edge_type, source_key, target_key) of the static dictionary
+    families (_static_edge_rows)."""
+    return _local_relation(
+        spark, "sedges", _static_edge_rows(),
+        "edge_type STRING, source_key STRING, target_key STRING",
     )
-    _ENTITY_NODES_CACHE[key] = lit
-    return lit
+
+
+# ---------------------------------------------------------------------------
+# Static dims as SQL literals
+# ---------------------------------------------------------------------------
+
+def _map_sql(d: dict) -> str:
+    """A map literal (constant-folded by Catalyst into one Literal)."""
+    return "map(" + ", ".join(
+        f"{E._sql_lit(k)}, {E._sql_lit(v)}" for k, v in sorted(d.items())
+    ) + ")"
+
+
+class _Dims:
+    """Every static dictionary lookup of the turn path, as literals."""
+
+    def __init__(self) -> None:
+        rows = _entity_rows()
+        key = {r[4]: r[0] for r in rows}
+        self.key = _map_sql(key)
+        self.canon_key = _map_sql({r[4]: key[r[5]] for r in rows})
+        self.type = _map_sql({r[4]: r[1] for r in rows})
+
+        # link.py's dictionary: alias -> its candidate entities, and
+        # the one candidate a mention of that alias resolves to at
+        # tier 3 (globally unique, or unique after excluding mocks)
+        names = {i: n for i, n, _ in E.ENTITIES}
+        cands: dict[str, set[int]] = {}
+        for eid, _aidx, alias in E.ALIASES:
+            if eid in names:
+                cands.setdefault(alias, set()).add(eid)
+        unamb: dict[str, int] = {}
+        for alias, eids in cands.items():
+            nonmock = [e for e in eids if "mock" not in names[e].lower()]
+            if len(eids) == 1:
+                unamb[alias] = min(eids)
+            elif len(nonmock) == 1:
+                unamb[alias] = nonmock[0]
+        self.alias_cands = _map_sql({a: sorted(e) for a, e in cands.items()})
+        self.alias_unamb = _map_sql(unamb)
+
+        def by_name(pairs) -> dict:
+            out: dict[str, list] = {}
+            for name, v in pairs:
+                out.setdefault(name, []).append(v)
+            return out
+
+        # CamelCase candidates typed by exact canonical name
+        # (collect.typed_entity_candidates), tool calls by tool name,
+        # return-section identifiers by Datamodel name
+        self.name_ids = _map_sql(by_name((n, i) for i, n, _ in E.ENTITIES))
+        self.tool_keys = _map_sql(by_name((n, key[i]) for i, n, _ in E.TOOLS))
+        self.dm_keys = _map_sql(by_name((r[2], r[0]) for r in rows if r[1] == "Datamodel"))
+        # endpoint templates for link_api_nodes (linker.rs:129-163)
+        eps = []
+        for i, v, s in E.ENDPOINTS:
+            epath = f"/api/{s}/:param"
+            nseg = len([p for p in epath.split("/") if p])
+            eps.append(
+                f"named_struct('eid', {i}, 'verb', {E._sql_lit(v)}, "
+                f"'epath', {E._sql_lit(epath)}, 'nseg', {nseg})"
+            )
+        self.endpoints = "array(" + ", ".join(eps) + ")"
+
+
+@lru_cache(maxsize=1)
+def _dims() -> _Dims:
+    return _Dims()
+
+
+def _lookup(m: str, k: str) -> str:
+    return f"try_element_at({m}, {k})"
+
+
+def _lookup_all(arr: str, m: str) -> str:
+    """Concatenated map values of the array's keys that are in m."""
+    return (
+        f"flatten(transform(filter({arr}, x -> map_contains_key({m}, x)), "
+        f"x -> {_lookup(m, 'x')}))"
+    )
+
+
+def _extract_sql(text: str, regex: str, group: int, guard: str | None) -> str:
+    """regexp_extract_all behind a zero-allocation contains() guard on
+    the regex's mandatory literal (operators/extract.py)."""
+    ext = f"regexp_extract_all({text}, {_pat(regex, 'spark')}, {group})"
+    if guard is None:
+        return ext
+    return f"CASE WHEN contains({text}, '{guard}') THEN {ext} ELSE CAST(array() AS ARRAY<STRING>) END"
+
+
+def _resolve_sql(surfaces: str) -> str:
+    """link.link_mentions' best candidate per surface, as an
+    expression: the tier-3 candidate if the alias has one; else the
+    lowest candidate id with an unambiguous mention in the same
+    conversation (tier 2, `conv_unamb`); else the lowest candidate id
+    (tier 1). Unknown aliases resolve to nothing. -> array<int>."""
+    d = _dims()
+    cands = _lookup(d.alias_cands, "s")
+    best = (
+        f"coalesce({_lookup(d.alias_unamb, 's')}, "
+        f"try_element_at(filter({cands}, c -> array_contains(conv_unamb, c)), 1), "
+        f"try_element_at({cands}, 1))"
+    )
+    return f"array_distinct(filter(transform({surfaces}, s -> {best}), e -> e IS NOT NULL))"
+
+
+# ---------------------------------------------------------------------------
+# The per-turn fact table
+# ---------------------------------------------------------------------------
+
+def turn_facts(transcripts: DataFrame, pack: dict | None = None) -> DataFrame:
+    """One row per turn, in one pass over `transcripts` (scan, three
+    projections and one window over conv_id — shuffle-free under the
+    derivation's conv_id partitioning):
+
+      conv_id, turn_idx, role, tool, bucket, turn_key, conv_key
+      t_first, istart   the conversation's first turn and first
+                        system turn (Import start)
+      ents       resolved entity ids of the turn's '@alias' mentions
+      t0_ents    resolved entity ids of the conversation's turn 0
+                 (its import set)
+      cands      CamelCase candidates typed by canonical name
+      tool_keys  node keys of the called tool Libraries
+      reqs       array<struct<verb, path, key, eps>>: each request,
+                 its node key and its matched endpoint ids
+                 (verb + segment count + paths_match, linker.rs:
+                 129-163, 241-266)
+      tids       referenced test ids
+      vnames     declared var names (every occurrence)
+      vuses      array<struct<vname, imported>>: distinct var uses;
+                 imported = a system turn of the conversation
+                 contains the name (the import-section tier,
+                 format.rs:594)
+      dm_keys    Datamodel keys of the return-section identifiers
+
+    Consumers select what they need; Catalyst prunes the rest
+    (including the window when no conversation-level column is
+    read)."""
+    d = _dims()
+    w = "OVER (PARTITION BY conv_id)"
+    ret = RETURN_SECTION_SQL.format(t="text")
+    unamb = f"filter(transform(surfaces, s -> {_lookup(d.alias_unamb, 's')}), e -> e IS NOT NULL)"
+    # every var name starts with VAR_PREFIX (collect.extract_var_defs),
+    # so a system turn without it can import none
+    ep_match = (
+        f"transform(filter({d.endpoints}, ep -> ep.verb = r.verb"
+        f" AND ep.nseg = {n_segments_sql('r.norm', 'spark')}"
+        f" AND {paths_match_sql('r.norm', 'ep.epath', 'spark')}), ep -> ep.eid)"
+    )
+    return (
+        transcripts.selectExpr(
+            "conv_id",
+            "turn_idx",
+            "role",
+            "tool",
+            f"{BUCKET_SQL} AS bucket",
+            f"{_turn_key_sql('conv_id', 'turn_idx')} AS turn_key",
+            f"{_conv_key_sql('conv_id')} AS conv_key",
+            f"array_distinct({_extract_sql('text', X.MENTION_RE, 1, '@')}) AS surfaces",
+            f"array_distinct({_lookup_all(_extract_sql('text', CAMEL_RE, 0, None), d.name_ids)}) AS cands",
+            f"array_distinct({_lookup_all(_extract_sql('text', X.TOOL_RE, 1, 'tool:'), d.tool_keys)})"
+            " AS tool_keys",
+            f"transform({_extract_sql('text', X.REQUEST_RE, 0, ' /')}, m -> named_struct("
+            "'verb', split_part(m, ' ', 1), 'path', split_part(m, ' ', 2))) AS reqs_raw",
+            f"array_distinct({_extract_sql('text', X.TESTREF_RE, 1, 'ref test_')}) AS tids",
+            f"transform({_extract_sql('text', VARDECL_RE, 1, 'tool:')}, t -> '{VAR_PREFIX}' || t)"
+            " AS vnames",
+            f"array_distinct({_lookup_all(_extract_sql(ret, CAPIDENT_RE, 0, None), d.dm_keys)})"
+            " AS dm_keys",
+            f"CASE WHEN role = 'system' AND contains(text, '{VAR_PREFIX}') THEN text END AS imp_text",
+        )
+        .selectExpr(
+            "*",
+            f"flatten(collect_set({unamb}) {w}) AS conv_unamb",
+            f"flatten(collect_set(CASE WHEN turn_idx = 0 THEN surfaces END) {w}) AS t0_surfaces",
+            f"min(turn_idx) {w} AS t_first",
+            f"min(CASE WHEN role = 'system' THEN turn_idx END) {w} AS istart",
+            f"collect_set(imp_text) {w} AS imp_texts",
+            "transform(reqs_raw, r -> named_struct('verb', r.verb, 'path', r.path, "
+            f"'norm', {X.norm_path_sql('r.path', pack)})) AS reqs_norm",
+        )
+        .selectExpr(
+            "conv_id", "turn_idx", "role", "tool", "bucket", "turn_key", "conv_key",
+            "t_first", "istart", "cands", "tool_keys", "tids", "vnames", "dm_keys",
+            f"{_resolve_sql('surfaces')} AS ents",
+            f"{_resolve_sql('t0_surfaces')} AS t0_ents",
+            "transform(reqs_norm, r -> named_struct('verb', r.verb, 'path', r.path, "
+            f"'key', {_request_key_sql('conv_id', 'turn_idx', 'r.path', 'r.verb')}, "
+            f"'eps', {ep_match})) AS reqs",
+            "transform(array_distinct(vnames), v -> named_struct('vname', v, "
+            "'imported', exists(imp_texts, t -> contains(t, v)))) AS vuses",
+        )
+    )
+
+
+def global_picks(facts: DataFrame) -> DataFrame:
+    """The cross-conversation picks, one aggregate over the facts ->
+    (kind, grp, name, lo, hi), lo/hi = min/max struct(conv_id,
+    turn_idx) of the group:
+
+      role  name = a role (Language stratum)
+      dir   name = a bucket (Directory stratum)
+      var   grp = bucket, name = var name: lo is the bucket-FIRST
+            declaring turn, the var's defining site (collect.
+            bucket_first_var_defs)
+      ep    name = endpoint id: lo/hi the first/last referencing
+            turn (handler_finder, mod.rs:208-223)
+
+    A struct-min/max aggregate, not a window: map-side partial
+    combine, parallelism-invariant."""
+    def pick(kind: str, grp: str, name: str) -> str:
+        return (
+            f"named_struct('kind', '{kind}', 'grp', {grp}, 'name', {name}, "
+            "'at', struct(conv_id, turn_idx))"
+        )
+
+    return (
+        facts.selectExpr(
+            f"inline(concat(array({pick('role', NULL_S, 'role')}, {pick('dir', NULL_S, 'bucket')}), "
+            f"transform(vnames, v -> {pick('var', 'bucket', 'v')}), "
+            f"flatten(transform(reqs, r -> transform(r.eps, e -> "
+            f"{pick('ep', NULL_S, 'CAST(e AS STRING)')})))))"
+        )
+        .groupBy("kind", "grp", "name")
+        .agg(F.expr("min(at) AS lo"), F.expr("max(at) AS hi"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -317,11 +567,11 @@ def static_edges(spark: SparkSession) -> DataFrame:
 # (global) families so the resumable builder (streaming/incremental)
 # composes the SAME code per unit: a bucket's output is a pure
 # function of the bucket's rows + static dims; everything that
-# consults global state (first_def, request ordering, role/bucket
-# strata) lives in the globals unit, whose fingerprint covers the
-# whole corpus. That decomposition is what makes bucket-wise resume
-# byte-equal to the single-shot build under ANY edit (including one
-# that moves a cross-bucket pick like the first defining turn).
+# consults global state (first_def, picks, role/bucket strata) lives
+# in the globals unit, whose fingerprint covers the whole corpus.
+# That decomposition is what makes bucket-wise resume byte-equal to
+# the single-shot build under ANY edit (including one that moves a
+# cross-bucket pick like the first defining turn).
 # ---------------------------------------------------------------------------
 
 _ROLLED = (
@@ -416,8 +666,7 @@ def local_nodes(spark: SparkSession, transcripts: DataFrame, requests: DataFrame
 
     # Request NODES are one per distinct (conv, turn, verb, path):
     # a turn containing the same 'VERB path' string twice must yield
-    # one node (its node_key is the same) — per-family dedup before
-    # the wide key strings, same invariant as build_edges.
+    # one node (its node_key is the same).
     reqs = requests.select("conv_id", "turn_idx", "verb", "path").distinct().selectExpr(
         f"{_request_key_sql('conv_id', 'turn_idx')} AS node_key",
         "'Request' AS node_type",
@@ -442,37 +691,27 @@ def global_nodes(
     first_def: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
-    """Repository / Language / Directory / Test / entity / Instance
-    nodes — derived from corpus-wide state (role strata, bucket list,
-    globally-first test definitions) or from the static dictionary."""
-    repo = spark.sql(
-        f"SELECT '{REPO_KEY}' AS node_key, 'Repository' AS node_type, "
-        "'corpus' AS name, 'corpus' AS file, 0 AS start, 0 AS `end`, "
-        "'' AS body, CAST(NULL AS STRING) AS docs, CAST(NULL AS STRING) AS hash, "
-        "CAST(NULL AS STRING) AS data_type, '' AS meta"
-    )
-
-    langs = (
-        transcripts.select("role").distinct().selectExpr(
-            f"{_lang_key_sql('role')} AS node_key",
-            "'Language' AS node_type",
-            "role AS name",
-            "'corpus' AS file",
-            "0 AS start",
-            "0 AS `end`",
-            *_pad(meta="'parent=corpus'"),
-        )
-    )
-
-    dirs = (
-        transcripts.selectExpr(f"{BUCKET_SQL} AS bucket").distinct().selectExpr(
-            f"{_dir_key_sql('bucket')} AS node_key",
-            "'Directory' AS node_type",
-            "bucket AS name",
-            "'corpus/' || bucket AS file",
-            "0 AS start",
-            "0 AS `end`",
-            *_pad(meta="'parent=corpus'"),
+    """Repository / Language / Directory / Var / Test / entity /
+    Instance nodes — derived from the corpus-wide picks (role and
+    bucket strata, bucket-first var definitions), the globally-first
+    test definitions, or the static dictionary."""
+    # Language / Directory / extracted Var nodes: one projection of
+    # the picks (a Var node sits at its bucket-FIRST declaring turn)
+    strata = (
+        global_picks(turn_facts(transcripts, pack))
+        .where("kind != 'ep'")
+        .selectExpr(
+            "CASE kind WHEN 'role' THEN " + _lang_key_sql("name")
+            + " WHEN 'dir' THEN " + _dir_key_sql("name")
+            + " ELSE " + _var_key_sql("name", "lo.conv_id", "lo.turn_idx") + " END AS node_key",
+            "CASE kind WHEN 'role' THEN 'Language' WHEN 'dir' THEN 'Directory' ELSE 'Var' END"
+            " AS node_type",
+            "name",
+            "CASE kind WHEN 'role' THEN 'corpus' WHEN 'dir' THEN 'corpus/' || name"
+            " ELSE 'corpus/' || lo.conv_id END AS file",
+            "CASE kind WHEN 'var' THEN lo.turn_idx ELSE 0 END AS start",
+            "CASE kind WHEN 'var' THEN lo.turn_idx ELSE 0 END AS `end`",
+            *_pad(meta="CASE kind WHEN 'var' THEN 'parent=' || lo.conv_id ELSE 'parent=corpus' END"),
         )
     )
 
@@ -494,34 +733,16 @@ def global_nodes(
         "node_key", "node_type", "name", "file", "start", "start AS `end`",
         "'' AS body", f"{NULL_S} AS docs", f"{NULL_S} AS hash", "data_type", "meta",
     )
-    insts = instance_nodes(spark).selectExpr(
+    static = _local_relation(
+        spark, "snodes", _static_node_rows(),
+        "node_key STRING, node_type STRING, name STRING, file STRING, start INT, "
+        "data_type STRING, meta STRING",
+    ).selectExpr(
         "node_key", "node_type", "name", "file", "start", "start AS `end`",
         "'' AS body", f"{NULL_S} AS docs", f"{NULL_S} AS hash", "data_type", "meta",
     )
 
-    # Extracted Var nodes — one per (Directory bucket, var name) at
-    # its bucket-FIRST declaring turn (collect.get_vars analog;
-    # cross-conversation pick => a globals family).
-    from .collect import bucket_first_var_defs
-
-    var_nodes = bucket_first_var_defs(transcripts).selectExpr(
-        f"{_var_key_sql('vname', 'd_conv', 'd_turn')} AS node_key",
-        "'Var' AS node_type",
-        "vname AS name",
-        "'corpus/' || d_conv AS file",
-        "d_turn AS start",
-        "d_turn AS `end`",
-        *_pad(meta="'parent=' || d_conv"),
-    )
-
-    return (
-        repo.unionByName(langs)
-        .unionByName(dirs)
-        .unionByName(tests)
-        .unionByName(ents)
-        .unionByName(insts)
-        .unionByName(var_nodes)
-    )
+    return strata.unionByName(tests).unionByName(ents).unionByName(static)
 
 
 def build_nodes(
@@ -541,290 +762,154 @@ def build_nodes(
 # Edges
 # ---------------------------------------------------------------------------
 
-def _edge(df: DataFrame, edge_type: str, src: str, dst: str) -> DataFrame:
-    return df.selectExpr(
-        f"'{edge_type}' AS edge_type", f"{src} AS source_key", f"{dst} AS target_key"
-    )
+_EDGE_T = "STRUCT<edge_type: STRING, source_key: STRING, target_key: STRING>"
 
 
-def req_matched(requests: DataFrame, ent_nodes: DataFrame) -> DataFrame:
-    """Requests joined to their Endpoint entity with the GENERAL
-    link_api_nodes join — a (verb, n_segments) equi-join carrying the
-    segment-wise paths_match residual (linker.rs:129-163, 241-266),
-    the same shape relink_api_nodes applies over graph-resident
-    nodes. No corpus-specific path pattern: an endpoint template like
-    '/api/{id}/orders' would link here without code changes. The
-    endpoint dim stays broadcast; the residual only evaluates on the
-    few rows sharing (verb, segment count). Shared by
-    CALLS(Request->Endpoint) and HANDLER."""
-    from ..functions.paths import n_segments_sql, paths_match_sql
-
-    spark = requests.sparkSession
-    en = ent_nodes.select(F.col("start").alias("eid"), "node_key")
-    eps = E.endpoints_df(spark).selectExpr(
-        "entity_id",
-        "verb AS ep_verb",
-        "'/api/' || seg || '/:param' AS epath",
-    ).selectExpr(
-        "entity_id", "ep_verb", "epath",
-        f"{n_segments_sql('epath', 'spark')} AS ep_nseg",
-    )
-    reqs = requests.selectExpr(
-        "conv_id", "turn_idx", "verb", "path", "norm_path",
-        f"{n_segments_sql('norm_path', 'spark')} AS r_nseg",
-    )
-    cond = (
-        (reqs["verb"] == eps["ep_verb"])
-        & (reqs["r_nseg"] == eps["ep_nseg"])
-        & F.expr(paths_match_sql("norm_path", "epath", "spark"))
-    )
+def _edge_sql(edge_type: str, src: str, dst: str) -> str:
     return (
-        reqs.join(F.broadcast(eps), cond)
-        .drop("ep_verb", "r_nseg", "ep_nseg", "epath")
-        .join(F.broadcast(en), F.col("entity_id") == F.col("eid"))
+        f"named_struct('edge_type', '{edge_type}', 'source_key', {src}, "
+        f"'target_key', {dst})"
     )
 
 
-def local_edges(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    resolved: DataFrame,
-    ent_nodes: DataFrame,
-    requests: DataFrame,
-    matched: DataFrame | None = None,
-) -> DataFrame:
+def _each(arr: str, var: str, edge_type: str, src: str, dst: str, cond: str | None = None) -> str:
+    """One edge per element of `arr` (optionally filtered)."""
+    if cond is not None:
+        arr = f"filter({arr}, {var} -> {cond})"
+    return f"transform({arr}, {var} -> {_edge_sql(edge_type, src, dst)})"
+
+
+def _when(cond: str, edges: str) -> str:
+    return f"CASE WHEN {cond} THEN {edges} ELSE CAST(array() AS ARRAY<{_EDGE_T}>) END"
+
+
+def _local_edges_sql() -> str:
+    """The 13 bucket-local families as one array per fact row."""
+    d = _dims()
+
+    def key(e: str) -> str:
+        return _lookup(d.key, e)
+
+    def typ(e: str) -> str:
+        return _lookup(d.type, e)
+
+    families = [
+        # CONTAINS Directory -> File, once per conversation
+        _when("turn_idx = t_first",
+              f"array({_edge_sql('CONTAINS', _dir_key_sql('bucket'), 'conv_key')})"),
+        # CONTAINS File -> turn
+        f"array({_edge_sql('CONTAINS', 'conv_key', 'turn_key')})",
+        # CONTAINS File -> Import, at the first system turn
+        _when("turn_idx = istart",
+              f"array({_edge_sql('CONTAINS', 'conv_key', _import_key_sql('conv_id', 'istart'))})"),
+        # CONTAINS turn -> Request
+        _each("reqs", "r", "CONTAINS", "turn_key", "r.key"),
+        # CALLS Request -> Endpoint (link_api_nodes)
+        f"flatten(transform(reqs, r -> {_each('r.eps', 'e', 'CALLS', 'r.key', key('e'))}))",
+        # USES turn -> canonical entity, from resolved mentions and
+        # typed CamelCase candidates alike
+        _each(f"array_distinct(transform(array_union(ents, cands), e -> {_lookup(d.canon_key, 'e')}))",
+              "k", "USES", "turn_key", "k"),
+        # CALLS turn -> tool Library
+        _each("tool_keys", "k", "CALLS", "turn_key", "k"),
+        # ARG_OF tool turn -> entity passed as the call argument
+        _when("tool != ''", _each("ents", "e", "ARG_OF", "turn_key", key("e"))),
+        # IMPORTS File -> entities mentioned in turn 0
+        _when("turn_idx = 0", _each("ents", "e", "IMPORTS", "conv_key", key("e"))),
+        # INCLUDES Feature -> turn, RENDERS Page -> turn
+        _each("ents", "e", "INCLUDES", key("e"), "turn_key", f"{typ('e')} = 'Feature'"),
+        _each("ents", "e", "RENDERS", key("e"), "turn_key", f"{typ('e')} = 'Page'"),
+        # CONTAINS turn -> dictionary Var under the tier cascade: only
+        # the imported tier can accept a dictionary-resident var
+        # (file 'entities' is no conversation and has no bucket), i.e.
+        # the conversation's turn 0 mentions it
+        _each("ents", "e", "CONTAINS", "turn_key", key("e"),
+              f"{typ('e')} = 'Var' AND array_contains(t0_ents, e)"),
+        # CONTAINS turn -> Datamodel of a return-section identifier
+        _each("dm_keys", "k", "CONTAINS", "turn_key", "k"),
+    ]
+    return "concat(" + ", ".join(families) + ")"
+
+
+def local_edges(facts: DataFrame) -> DataFrame:
     """Bucket-pure edge families: every row is a function of one
-    conversation's rows + static dims."""
-    en = ent_nodes.select(F.col("start").alias("eid"), "node_key", "canon_id")
-    en_b = F.broadcast(en)
-    if matched is None:
-        matched = req_matched(requests, ent_nodes)
-
-    convs = transcripts.select("conv_id").distinct()
-    contains_conv = _edge(
-        convs.selectExpr("conv_id", f"{BUCKET_SQL} AS bucket"),
-        "CONTAINS", _dir_key_sql("bucket"), _conv_key_sql("conv_id"),
-    )
-    contains_turn = _edge(
-        transcripts, "CONTAINS", _conv_key_sql("conv_id"), _turn_key_sql("conv_id", "turn_idx")
-    )
-    import_convs = (
-        transcripts.where("role = 'system'")
-        .groupBy("conv_id")
-        .agg(F.expr("CAST(min(turn_idx) AS INT)").alias("istart"))
-    )
-    contains_import = _edge(
-        import_convs, "CONTAINS", _conv_key_sql("conv_id"), _import_key_sql("conv_id", "istart")
-    )
-    contains_request = _edge(
-        requests.select("conv_id", "turn_idx", "verb", "path").distinct(),
-        "CONTAINS", _turn_key_sql("conv_id", "turn_idx"),
-        _request_key_sql("conv_id", "turn_idx"),
-    )
-
-    # USES: resolved mention -> canonical entity node. Two broadcast
-    # hops: entity -> canon_id -> canonical entity's node_key. Dedup
-    # happens HERE on the narrow (conv_id, turn_idx, canon_key)
-    # columns — a distinct whose ClusteredDistribution is satisfied
-    # by the conv_id hash partitioning the transcripts already carry,
-    # i.e. map-side only, no shuffle — and BEFORE the wide node_key
-    # strings are materialized.
-    canon_key = F.broadcast(
-        en.select(F.col("eid").alias("canon_id"), F.col("node_key").alias("canon_key"))
-    )
-    # Mention-USES plus candidate-USES: per-turn CamelCase identifier
-    # candidates (collect.rs:40-59 — dictionary-free extraction)
-    # typed by exact canonical-name match cover identifiers written
-    # by canonical name, which the case-sensitive alias path
-    # deliberately rejects. Both routes land in ONE family with one
-    # narrow distinct.
-    from .collect import typed_entity_candidates
-
-    mention_pairs = resolved.join(en_b, resolved["entity_id"] == en["eid"]).select(
-        "conv_id", "turn_idx", "canon_id"
-    )
-    cand_pairs = (
-        typed_entity_candidates(transcripts, E.entities_df(spark))
-        .join(en_b, F.col("entity_id") == en["eid"])
-        .select("conv_id", "turn_idx", "canon_id")
-    )
-    uses = _edge(
-        mention_pairs.unionByName(cand_pairs)
-        .join(canon_key, "canon_id")
-        .select("conv_id", "turn_idx", "canon_key")
-        .distinct(),
-        "USES", _turn_key_sql("conv_id", "turn_idx"), "canon_key",
-    )
-
-    tools = F.broadcast(E.tools_df(spark))
-    calls_tool = _edge(
-        X.extract_tool_calls(transcripts)
-        .join(tools, F.col("toolname") == tools["canonical_name"])
-        .join(en_b, F.col("entity_id") == en["eid"])
-        .select("conv_id", "turn_idx", "node_key")
-        .distinct(),
-        "CALLS", _turn_key_sql("conv_id", "turn_idx"), "node_key",
-    )
-
-    calls_ep = _edge(
-        matched.select("conv_id", "turn_idx", "verb", "path", "node_key").distinct(),
-        "CALLS", _request_key_sql("conv_id", "turn_idx"), "node_key",
-    )
-
-    # ARG_OF: tool turn -> entity passed as the call argument
-    # (mod.rs:78). The (conv_id, turn_idx) join against the resolved
-    # mentions is co-partitioned by conv_id — no extra shuffle.
-    tool_turns = transcripts.where("tool != ''").select("conv_id", "turn_idx")
-    arg_of = _edge(
-        resolved.join(tool_turns, ["conv_id", "turn_idx"])
-        .join(en_b, resolved["entity_id"] == en["eid"])
-        .select("conv_id", "turn_idx", "node_key")
-        .distinct(),
-        "ARG_OF", _turn_key_sql("conv_id", "turn_idx"), "node_key",
-    )
-
-    # IMPORTS: conv File -> entities mentioned in turn 0 (the
-    # top-of-file import section analog, file_imports mod.rs:218-224)
-    imports_dyn = _edge(
-        resolved.where(F.col("turn_idx") == 0)
-        .join(en_b, resolved["entity_id"] == en["eid"])
-        .select("conv_id", "node_key")
-        .distinct(),
-        "IMPORTS", _conv_key_sql("conv_id"), "node_key",
-    )
-
-    # INCLUDES: Feature -> mentioning turn; RENDERS: Page ->
-    # mentioning turn (link_e2e_tests_pages analog, linker.rs:30-48)
-    def _typed_mention_edges(etype: str, node_type: str) -> DataFrame:
-        dim = F.broadcast(
-            ent_nodes.where(F.col("node_type") == node_type)
-            .select(F.col("start").alias("teid"), F.col("node_key").alias("src_key"))
-        )
-        return _edge(
-            resolved.join(dim, resolved["entity_id"] == F.col("teid"))
-            .select("conv_id", "turn_idx", "src_key")
-            .distinct(),
-            etype, "src_key", _turn_key_sql("conv_id", "turn_idx"),
-        )
-
-    includes = _typed_mention_edges("INCLUDES", "Feature")
-    renders = _typed_mention_edges("RENDERS", "Page")
-
-    # CONTAINS(Function turn -> dictionary Var) under the var-usage
-    # tier cascade (format.rs:561-617; only the 'imported' tier can
-    # accept for dictionary-resident vars — see collect.py) and
-    # CONTAINS(Function turn -> Datamodel) from return-section type
-    # identifiers (format.rs:621-644). Both are pure functions of the
-    # conversation's own rows + static dims => bucket-local.
-    from .collect import return_type_datamodels, var_usage_edges_dictionary
-
-    var_dict = _edge(
-        var_usage_edges_dictionary(resolved, ent_nodes),
-        "CONTAINS", _turn_key_sql("conv_id", "turn_idx"), "var_key",
-    )
-    ret_dm = _edge(
-        return_type_datamodels(transcripts, ent_nodes),
-        "CONTAINS", _turn_key_sql("conv_id", "turn_idx"), "dm_key",
-    )
-
+    conversation's rows + static dims. One explode, one dedup on
+    (conv_id, edge) — satisfied by the conv_id partitioning, so
+    map-side only."""
     return (
-        contains_conv.unionByName(contains_turn)
-        .unionByName(contains_import)
-        .unionByName(contains_request)
-        .unionByName(uses)
-        .unionByName(calls_tool)
-        .unionByName(calls_ep)
-        .unionByName(arg_of)
-        .unionByName(imports_dyn)
-        .unionByName(includes)
-        .unionByName(renders)
-        .unionByName(var_dict)
-        .unionByName(ret_dm)
+        facts.selectExpr("conv_id", f"inline({_local_edges_sql()})")
+        .distinct()
+        .drop("conv_id")
     )
 
 
 def global_edges(
     spark: SparkSession,
-    transcripts: DataFrame,
-    ent_nodes: DataFrame,
+    facts: DataFrame,
     first_def: DataFrame,
-    matched: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
-    """Cross-conversation edge families: scaffolding of the global
-    strata, test linking (depends on the corpus-wide first_def pick),
-    HANDLER (corpus-wide first request per endpoint), canonical-OF
-    and the static dictionary families."""
-    contains_lang = _edge(
-        transcripts.select("role").distinct(),
-        "CONTAINS", f"'{REPO_KEY}'", _lang_key_sql("role"),
-    )
-    buckets = transcripts.selectExpr(f"{BUCKET_SQL} AS bucket").distinct()
-    contains_dir = _edge(buckets, "CONTAINS", f"'{REPO_KEY}'", _dir_key_sql("bucket"))
-    contains_test = _edge(
-        first_def, "CONTAINS", _conv_key_sql("d_conv"),
-        _test_key_sql("tid", "d_conv", "d_turn", pack),
-    )
-
-    # CALLS: Test -> referencing turn (shared-test-id link,
-    # linker.rs:56-127; Test covers the Functions that reference it)
-    calls_test = _edge(
-        X.extract_test_refs(transcripts)
-        .join(F.broadcast(first_def.select("tid", "d_conv", "d_turn")), "tid")
-        .select("conv_id", "turn_idx", "tid", "d_conv", "d_turn")
-        .distinct(),
-        "CALLS", _test_key_sql("tid", "d_conv", "d_turn", pack),
-        _turn_key_sql("conv_id", "turn_idx"),
+    """Cross-conversation edge families: the role/bucket strata, the
+    bucket-first Var scaffold, HANDLER (first — or, per the pack's
+    handler_pick, last — referencing turn per endpoint), the Test
+    scaffold and test links (the corpus-wide first_def pick), tiered
+    extracted-var usage, and the static dictionary families."""
+    d = _dims()
+    picks = global_picks(facts)
+    at = "lo" if (pack or {}).get("handler_pick", "first") == "first" else "hi"
+    strata = picks.selectExpr(
+        "CASE kind WHEN 'ep' THEN 'HANDLER' ELSE 'CONTAINS' END AS edge_type",
+        f"CASE kind WHEN 'var' THEN {_conv_key_sql('lo.conv_id')}"
+        f" WHEN 'ep' THEN {_lookup(d.key, 'CAST(name AS INT)')}"
+        f" ELSE '{REPO_KEY}' END AS source_key",
+        f"CASE kind WHEN 'role' THEN {_lang_key_sql('name')}"
+        f" WHEN 'dir' THEN {_dir_key_sql('name')}"
+        f" WHEN 'var' THEN {_var_key_sql('name', 'lo.conv_id', 'lo.turn_idx')}"
+        f" ELSE {_turn_key_sql(f'{at}.conv_id', f'{at}.turn_idx')} END AS target_key",
     )
 
-    # HANDLER: endpoint -> globally-first referencing turn (or -last,
-    # when a dialect pack's handler_pick says so — mod.rs:208-223 as
-    # data, live in the build). A window over the 5 endpoint keys
-    # would cap this stage at 5 concurrent tasks (a hard scaling
-    # ceiling on the whole build); the struct-min/max aggregate gets
-    # map-side combine instead — the shuffle carries one candidate
-    # per (endpoint, partition).
-    agg = "min" if (pack or {}).get("handler_pick", "first") == "first" else "max"
-    handler = _edge(
-        matched.groupBy("entity_id", "node_key")
-        .agg(F.expr(f"{agg}(struct(conv_id, turn_idx)) AS f"))
-        .selectExpr("node_key", "f.conv_id AS conv_id", "f.turn_idx AS turn_idx"),
-        "HANDLER", "node_key", _turn_key_sql("conv_id", "turn_idx"),
+    contains_test = first_def.selectExpr(
+        "'CONTAINS' AS edge_type",
+        f"{_conv_key_sql('d_conv')} AS source_key",
+        f"{_test_key_sql('tid', 'd_conv', 'd_turn', pack)} AS target_key",
     )
 
-    # OF: alias-member entity -> canonical entity (the
-    # canonicalization collapse; add_instances analog)
-    canon_key = F.broadcast(
-        ent_nodes.selectExpr("start AS canon_id", "node_key AS canon_key")
+    # Per-turn links to the picks, one broadcast join:
+    #   CALLS Test -> referencing turn (shared-test-id link,
+    #     linker.rs:56-127);
+    #   CONTAINS turn -> extracted Var under the tier cascade
+    #     (format.rs:577-617): same file, imported, or same directory.
+    dims = first_def.selectExpr(
+        "'test' AS kind", "tid AS name", "d_conv", "d_turn", f"{NULL_S} AS vbucket"
+    ).unionByName(
+        picks.where("kind = 'var'").selectExpr(
+            "kind", "name", "lo.conv_id AS d_conv", "lo.turn_idx AS d_turn", "grp AS vbucket"
+        )
     )
-    of_canon = _edge(
-        ent_nodes.where(F.col("canon_id") != F.col("start")).join(canon_key, "canon_id"),
-        "OF", "node_key", "canon_key",
+    refs = facts.selectExpr(
+        "conv_id", "bucket", "turn_key",
+        "inline(concat("
+        "transform(tids, t -> named_struct('kind', 'test', 'name', t, 'imported', false)), "
+        "transform(vuses, v -> named_struct('kind', 'var', 'name', v.vname, 'imported', v.imported))))",
     )
-
-    # Extracted Var scaffold + tiered usage (collect.py): the Var
-    # node's defining site is a bucket-FIRST pick (cross-conv) =>
-    # globals families, like first_def.
-    from .collect import bucket_first_var_defs, var_usage_edges_extracted
-
-    contains_var = _edge(
-        bucket_first_var_defs(transcripts),
-        "CONTAINS", _conv_key_sql("d_conv"), _var_key_sql("vname", "d_conv", "d_turn"),
-    )
-    var_extracted = _edge(
-        var_usage_edges_extracted(transcripts),
-        "CONTAINS", _turn_key_sql("conv_id", "turn_idx"),
-        _var_key_sql("vname", "d_conv", "d_turn"),
+    linked = (
+        refs.join(F.broadcast(dims), ["kind", "name"])
+        .where("kind = 'test' OR conv_id = d_conv OR imported OR bucket = vbucket")
+        .selectExpr(
+            "conv_id",
+            "CASE kind WHEN 'test' THEN 'CALLS' ELSE 'CONTAINS' END AS edge_type",
+            f"CASE kind WHEN 'test' THEN {_test_key_sql('name', 'd_conv', 'd_turn', pack)}"
+            " ELSE turn_key END AS source_key",
+            f"CASE kind WHEN 'test' THEN turn_key"
+            f" ELSE {_var_key_sql('name', 'd_conv', 'd_turn')} END AS target_key",
+        )
+        .distinct()
+        .drop("conv_id")
     )
 
     return (
-        contains_lang.unionByName(contains_dir)
-        .unionByName(contains_test)
-        .unionByName(calls_test)
-        .unionByName(handler)
-        .unionByName(of_canon)
-        .unionByName(contains_var)
-        .unionByName(var_extracted)
+        strata.unionByName(contains_test)
+        .unionByName(linked)
         .unionByName(static_edges(spark))
     )
 
@@ -838,24 +923,24 @@ def build_edges(
     requests: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
-    """All 12 edge families, deduped on (edge_type, source_key,
-    target_key) PER FAMILY on narrow conv_id-prefixed columns —
-    map-side only under the conv_id partitioning, before wide key
-    strings exist. Families cannot collide across the union:
-    CONTAINS sub-families target disjoint node-type key spaces; the
-    three CALLS families have disjoint source spaces (Function turns
-    / Request keys / Test keys); OF splits into entity->entity and
-    instance->entity; IMPORTS into File->entity and Class->Class;
-    the rest are unique by construction. So no global dropDuplicates
-    — at 10^12 turns that global shuffle of every edge was the
-    single largest cost of the build (test_edge_dedup_invariant
+    """All 12 edge types from one fact table (turn_facts). `resolved`,
+    `ent_nodes` and `requests` are the pipeline's query-surface
+    stages; the edge families do not read them — the fact table
+    re-derives the same facts from `transcripts` in its single pass
+    and takes the dictionary as literals — and they stay in the
+    signature for the callers that hold them.
+
+    Dedup is per arm on (src, dst, type): the local explode dedups
+    once on (conv_id, edge), the linked arm likewise, and the picks,
+    first_def and static arms are unique by construction. Arms cannot
+    collide: CONTAINS sub-families target disjoint node-type key
+    spaces; the three CALLS families have disjoint source spaces
+    (Function turns / Request keys / Test keys); OF splits into
+    entity->entity and instance->entity; IMPORTS into File->entity and
+    Class->Class. So no global dropDuplicates (test_edge_dedup_invariant
     proves the invariant)."""
-    # consumed by both calls_ep (local) and handler (global): persist
-    # so the request-extraction scan runs once per action.
-    matched = req_matched(requests, ent_nodes).persist()
-    return local_edges(spark, transcripts, resolved, ent_nodes, requests, matched).unionByName(
-        global_edges(spark, transcripts, ent_nodes, first_def, matched, pack)
-    )
+    facts = turn_facts(transcripts, pack)
+    return local_edges(facts).unionByName(global_edges(spark, facts, first_def, pack))
 
 
 def triples(edges: DataFrame) -> DataFrame:

@@ -4,13 +4,24 @@ The reference's 14-stage build (ast/src/builder/core.rs:33-107)
 collapses, for transcripts, into the dependency DAG SURVEY.md §3.1
 identifies: scaffold -> entities -> in-file relations -> resolution
 joins -> global linkers. Stages are declarative DataFrame plans;
-Catalyst fuses them — materialization boundaries exist only at the
-sink (and at checkpoints for resume, streaming/incremental.py).
+materialization boundaries exist only at the sink (and at checkpoints
+for resume, streaming/incremental.py).
+
+Plan shape (operators/materialize.py): the edge families fan out of
+one per-turn fact table — one pass over `transcripts` that extracts,
+resolves mentions and matches requests, with the static dictionary
+as literals — through one explode for the bucket-local families and
+one aggregate of cross-conversation picks for the global ones. Spark
+shares nothing between the arms of one action: each arm re-runs the
+pass over `transcripts` (pruned to the columns it reads) and the
+aggregates it reads — the picks and first_def aggregates, which each
+feed two arms, run twice, and the final adaptive plan of the edges
+holds no ReusedExchange.
 
 Partitioning doctrine: the transcript stream is repartitioned by
 conv_id once, up front; every per-conversation stage (extraction,
-same-conv linking tier, per-conv pre-aggregation) then reuses that
-partitioning without further shuffles. Dictionary joins broadcast.
+the same-conv linking tier, per-conv rollups and dedups) then reuses
+that partitioning without further shuffles.
 """
 
 from __future__ import annotations
@@ -40,9 +51,8 @@ def build_graph(
     None keeps the default transcriptish dialect (tid%3, 'first').
 
     Nothing is executed here — callers trigger actions (write/count)
-    on the pieces they need; Spark computes shared ancestors once per
-    action tree (use .persist() on `transcripts` for multi-action
-    workloads).
+    on the pieces they need. Each action re-reads `transcripts` once
+    per arm that needs it; .persist() it for multi-action workloads.
 
     repartition_by_conv: transcripts from derive_transcripts already
     carry HashPartitioning(conv_id) (the derivation window partitions
@@ -57,22 +67,19 @@ def build_graph(
         # multi-action workloads (the driver's ~50 queries, an
         # interactive session): materialize the shared prefix once.
         # Single-action builds (bench e2e, the resumable units) keep
-        # everything lazy — Spark's ReusedExchange dedups identical
-        # subtrees within one action without pinning memory.
+        # everything lazy and pin no memory; their arms re-read the
+        # caller's `transcripts`.
         transcripts = transcripts.persist()
 
-    # The link stage consumes RAW (per-occurrence) mentions: its
-    # best-candidate group-by dedups per (conv, turn, surface), so
-    # the distinct shuffle of the widest intermediate is skipped
-    # entirely. The distinct `mentions` output below is for the
-    # query surface, not the hot path.
+    # mentions, resolved and requests are the query surface (and
+    # Request nodes); the edge families re-derive them inside the
+    # fact table's single pass (materialize.turn_facts).
     mentions_raw = X.extract_mentions_raw(transcripts)
     mentions = mentions_raw.distinct()
     resolved = L.link_mentions(spark, mentions_raw)
     ent_nodes = M.entity_nodes(spark)
-    # shared subtrees consumed by both node and edge materialization
-    # (plans, not results — identical subplans are deduplicated by
-    # Spark's ReusedExchange at execution time)
+    # consumed by both node and edge materialization (a plan, not a
+    # result: every arm that reads it computes it)
     first_def = X.first_test_defs(transcripts)
     requests = X.extract_requests(transcripts, pack)
     if persist_intermediates:
@@ -89,7 +96,7 @@ def build_graph(
         # stands in for reading them back, and localCheckpoint makes
         # that stand-in honest: it TRUNCATES LINEAGE, so downstream
         # actions plan against a materialized table instead of
-        # re-optimizing the 12-family union every action (measured:
+        # re-optimizing the edge plan every action (measured:
         # warm kg_edges 2.6 s -> 0.37 s at sf0.1 — the wall was
         # Catalyst re-planning, not the scan). Partitioning is
         # preserved. The lost recompute-on-executor-failure only

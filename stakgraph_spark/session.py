@@ -27,6 +27,23 @@ def _local_dir() -> str:
         return "/tmp"
 
 
+MAX_DRIVER_MEM_GB = 8
+
+
+def _default_driver_mem() -> str:
+    """Half of the memory this process may use (the host's, or its
+    cgroup limit when lower), in whole GiB, between 1g and 8g."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            raw = f.read().strip()
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    except OSError:
+        pass
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, limit // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "stakgraph_spark",
     master: str | None = None,
@@ -35,11 +52,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so bench can pit local[8] vs local[32] for the scaling-efficiency
-    protocol (BASELINE.md).
+    master defaults to ``local[$SPARK_GRAFT_CPUS]``, else to the CPUs
+    this process may run on; driver memory to ``$SPARK_DRIVER_MEM``,
+    else to _default_driver_mem().
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -78,7 +95,12 @@ def get_spark(
         # Keep broadcast threshold explicit: entity dictionaries are
         # broadcast by hint, not by accident.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
+        # JVM-wide cache of generated classes (static; Spark's default
+        # of 100 entries is smaller than one build's class set, so a
+        # rebuild in the same JVM — a resumable unit, a serving
+        # session — recompiled nearly every class)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Throughput GC for a batch engine: pinned same-window A/B on
         # the 4M-turn build measured ParallelGC+AlwaysPreTouch faster
         # than the G1 default on BOTH legs (2-core 204->187s, 8-core

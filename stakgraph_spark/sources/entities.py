@@ -138,14 +138,26 @@ def endpoint_name(verb: str, seg: str) -> str:
 # (b) LocalRelations broadcast without scheduling tasks.
 
 
-def _sql_lit(v) -> str:
+def _sql_lit(v, typ: str = "STRING") -> str:
+    """A Spark SQL literal: string, int, NULL of type `typ`, or an
+    array of literals. Strings take backslash escapes (Spark SQL
+    concatenates adjacent literals, so '' is no escaped quote)."""
+    if v is None:
+        return f"CAST(NULL AS {typ})"
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, (list, tuple)):
+        return "array(" + ", ".join(_sql_lit(x) for x in v) + ")"
     return f"CAST({v} AS INT)"
 
 
-def _values_df(spark: SparkSession, rows: list[tuple], cols: list[str]) -> DataFrame:
-    vals = ", ".join("(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows)
+def _values_df(
+    spark: SparkSession, rows: list[tuple], cols: list[str], types: list[str] | None = None
+) -> DataFrame:
+    types = types or ["STRING"] * len(cols)
+    vals = ", ".join(
+        "(" + ", ".join(_sql_lit(v, t) for v, t in zip(r, types)) + ")" for r in rows
+    )
     return spark.sql(f"SELECT * FROM VALUES {vals} AS t({', '.join(cols)})")
 
 

@@ -131,8 +131,8 @@ _NULL_S = "CAST(NULL AS STRING)"
 
 
 def _ep_match(req_norm: str) -> str:
-    """The engine's GENERAL request->endpoint join residual
-    (req_matched, operators/materialize.py:526-561): segment-count
+    """The engine's GENERAL request->endpoint match (the endpoint
+    filter in materialize.turn_facts): verb and segment-count
     equality + segment-wise paths_match of the normalized request
     path against the endpoint's template path — not exact string
     equality, so a corpus where a concrete segment aligns with an

@@ -35,13 +35,11 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import extract as X
-from ..operators import link as L
 from ..operators import materialize as M
-from ..sources import entities as E
 
 MANIFEST_SCHEMA = (
     "unit STRING, input_fingerprint STRING, n_nodes BIGINT, n_edges BIGINT, "
@@ -143,8 +141,7 @@ class ResumableBuilder:
         if done.get("globals") != g_fp:
             t0 = time.time()
             g_nodes = M.global_nodes(spark, transcripts, ent_nodes, first_def)
-            matched = M.req_matched(X.extract_requests(transcripts), ent_nodes)
-            g_edges = M.global_edges(spark, transcripts, ent_nodes, first_def, matched)
+            g_edges = M.global_edges(spark, M.turn_facts(transcripts), first_def)
             n_n, n_e = self._write_unit("globals", g_nodes, g_edges)
             self._record(spark, "globals", g_fp, n_n, n_e, time.time() - t0)
             units_done += 1
@@ -160,10 +157,8 @@ class ResumableBuilder:
             if done.get(unit) == fp:
                 continue
             t0 = time.time()
-            requests = X.extract_requests(sub)
-            resolved = L.link_mentions(spark, X.extract_mentions_raw(sub))
-            nodes = M.local_nodes(spark, sub, requests)
-            edges = M.local_edges(spark, sub, resolved, ent_nodes, requests)
+            nodes = M.local_nodes(spark, sub, X.extract_requests(sub))
+            edges = M.local_edges(M.turn_facts(sub))
             n_n, n_e = self._write_unit(unit, nodes, edges)
             self._record(spark, unit, fp, n_n, n_e, time.time() - t0)
             units_done += 1

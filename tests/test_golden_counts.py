@@ -6,7 +6,8 @@ rejection, ambiguity tiers, transitive canonicalization)."""
 import pyspark.sql.functions as F
 
 from stakgraph_spark.plans.pipeline import build_from_sf_dir
-from tests.conftest import SF_SMALL
+from stakgraph_spark.sources.transcripts import read_transcripts
+from tests.conftest import SF_MID, SF_SMALL
 
 
 def test_census_sf0001(spark):
@@ -156,3 +157,25 @@ def test_edge_dedup_invariant(spark):
     g = build_from_sf_dir(spark, SF_SMALL)
     e = g["edges"]
     assert e.count() == e.dropDuplicates(["edge_type", "source_key", "target_key"]).count()
+
+
+def test_fact_table_resolution_equals_link_mentions(spark):
+    """The build resolves mentions inside the per-turn fact table
+    (map literals + one conv_id window); the query surface's
+    link_mentions (broadcast joins + struct-max aggregate) is the
+    reference: the same (conv, turn, entity) set."""
+    from stakgraph_spark.operators.extract import extract_mentions_raw
+    from stakgraph_spark.operators.link import link_mentions
+    from stakgraph_spark.operators.materialize import turn_facts
+
+    t = read_transcripts(spark, SF_MID)
+    want = {
+        (r["conv_id"], r["turn_idx"], r["entity_id"])
+        for r in link_mentions(spark, extract_mentions_raw(t)).collect()
+    }
+    got = {
+        (r["conv_id"], r["turn_idx"], e)
+        for r in turn_facts(t).select("conv_id", "turn_idx", "ents").collect()
+        for e in r["ents"]
+    }
+    assert want and got == want

@@ -91,3 +91,69 @@ def test_handler_and_first_def_have_partial_aggregates(spark):
     # no window partitioned by the 50-key tid (the derivation's
     # conv_id window is expected and fine)
     assert "windowspecdefinition(tid" not in plan
+
+
+# Ceilings on the build plan at SF_SMALL. Plan-operator and job
+# counts depend on the plan, not on the host's cores or speed. Before
+# the edge families came out of one per-turn fact table (13 local
+# union arms that each re-derived extract and link, with the static
+# dims joined as VALUES relations), the same build measured 181
+# BroadcastExchange and 165 LocalTableScan in the edges plan and 43
+# jobs for one build plus write_graph_parquet; the fact-table build
+# measures 19, 19 and 9. Each scan of the (non-persisted) transcript
+# derivation carries 3 dictionary broadcasts of its own: 6 scans
+# account for 18 of each count.
+EDGES_BROADCAST_MAX = 19
+EDGES_LOCAL_SCAN_MAX = 19
+BUILD_WRITE_JOBS_MAX = 9
+
+
+def test_edges_plan_broadcast_and_scan_ceilings(spark):
+    plan = _physical(_derivation_graph(spark)["edges"])
+    assert plan.count("BroadcastExchange") <= EDGES_BROADCAST_MAX
+    assert plan.count("LocalTableScan") <= EDGES_LOCAL_SCAN_MAX
+
+
+def _persisted_transcripts(spark):
+    from stakgraph_spark.sources.transcripts import read_transcripts
+
+    tr = read_transcripts(spark, SF_SMALL).persist()
+    tr.count()
+    return tr
+
+
+def test_build_and_write_job_ceiling(spark, tmp_path):
+    """One build_graph + write_graph_parquet over cached transcripts
+    (the batch shape): Spark jobs counted from a job group."""
+    from stakgraph_spark.plans.pipeline import build_graph
+    from stakgraph_spark.sources.sinks import write_graph_parquet
+
+    tr = _persisted_transcripts(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("build-write-pin", "build + write")
+    try:
+        g = build_graph(spark, tr)
+        write_graph_parquet(g["nodes"], g["edges"], str(tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+        tr.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("build-write-pin")
+    assert 0 < len(jobs) <= BUILD_WRITE_JOBS_MAX
+
+
+def test_non_persisting_build_leaves_cache_as_found(spark, tmp_path):
+    """build_graph(persist_intermediates=False) plus a write pins no
+    cache entry of its own: the session holds the same persistent
+    RDDs before and after."""
+    from stakgraph_spark.plans.pipeline import build_graph
+    from stakgraph_spark.sources.sinks import write_graph_parquet
+
+    tr = _persisted_transcripts(spark)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    try:
+        g = build_graph(spark, tr)
+        write_graph_parquet(g["nodes"], g["edges"], str(tmp_path))
+        assert jsc.getPersistentRDDs().size() == before
+    finally:
+        tr.unpersist()
