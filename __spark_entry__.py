@@ -624,25 +624,12 @@ def _q_paths_match(spark, sf_dir):
 def _q_collect(spark, sf_dir):
     """collect.rs/format.rs parity over the planted turns: candidate
     extraction, bucket-first var definitions, tiered var usage, and
-    return-type -> Datamodel resolution, tagged by kind."""
-    from stakgraph_spark.operators import collect as C
-    from stakgraph_spark.operators.materialize import entity_nodes
-    from stakgraph_spark.sources.entities import entities_df
+    return-type -> Datamodel resolution, tagged by kind — projections
+    of the build's fact table."""
+    from stakgraph_spark.operators.collect import planted_turns_sql
+    from stakgraph_spark.operators.materialize import collect_rows
 
-    tdf = spark.sql(C.planted_turns_sql())
-    cand = C.typed_entity_candidates(tdf, entities_df(spark)).selectExpr(
-        "'candidate' AS kind", "turn_idx AS turn_id", "name", "entity_type AS info"
-    )
-    vdef = C.bucket_first_var_defs(tdf).selectExpr(
-        "'var_def' AS kind", "d_turn AS turn_id", "vname AS name", "d_conv AS info"
-    )
-    vuse = C.var_usage_edges_extracted(tdf).selectExpr(
-        "'var_use' AS kind", "turn_idx AS turn_id", "vname AS name", "d_conv AS info"
-    )
-    ret = C.return_type_datamodels(tdf, entity_nodes(spark)).selectExpr(
-        "'return_type' AS kind", "turn_idx AS turn_id", "dm_key AS name", "'Datamodel' AS info"
-    )
-    return cand.unionByName(vdef).unionByName(vuse).unionByName(ret)
+    return collect_rows(spark.sql(planted_turns_sql()))
 
 
 def _q_fn_scalars(spark, sf_dir):

@@ -1,12 +1,21 @@
-"""Per-turn collection — Class/Var/Datamodel candidates mined from
-turn TEXT, plus the tiered var-usage and return-type link families.
+"""Per-turn collection rules — Class/Var/Datamodel candidates mined
+from turn TEXT, plus the tiered var-usage and return-type link
+families — and their parity check.
+
+The rules are applied by the build's per-turn fact table
+(materialize.turn_facts: typed candidates `cands`, var declarations
+`vnames` and uses `vuses`, return-type Datamodels `dm_keys`;
+global_picks' bucket-first var definitions; linked_refs' tier
+cascade). This module holds the rules' constants, the planted turns
+that exercise every rule, and collect_oracle_sql, the independent
+DuckDB rendering the kg_collect query is gated against.
 
 Reference analogs:
   * collect_classes / get_vars / get_query_opt collect entities from
     each file's text independently of any dictionary
     (ast/src/lang/parse/collect.rs:40-59; lang/mod.rs:204-211) — the
     extraction itself needs no pre-registered entity list; typing
-    happens in a later join;
+    (exact, case-sensitive canonical-name match) comes after;
   * var-usage-in-functions tiered accept: a Function CONTAINS a Var
     it references iff same-file OR the file's import section contains
     the var's name OR same-directory
@@ -23,15 +32,9 @@ meta records parent=<bucket>), so `dirname(file)` for a conversation
 file is its bucket; the static dictionary file 'entities' has no
 bucket and never dir-matches a conversation (the reference's
 Path::parent comparison, format.rs:605-612).
-
-All extraction is built-in regexp work (JVM, whole-stage codegen);
-occurrence streams are conv_id-partition-pure.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Interior-capital CamelCase identifier — the is_capitalized type/
 # entity surface form (a second uppercase after >=1 lowercase, so
@@ -55,145 +58,9 @@ CAPIDENT_RE = r"\b[A-Z][A-Za-z0-9]*\b"
 BUCKET_LEN = 9  # conv_id[0:9] = the Directory stratum
 
 
-def extract_entity_candidates(transcripts: DataFrame) -> DataFrame:
-    """-> (conv_id, turn_idx, name): CamelCase identifier occurrences
-    per turn, dictionary-free (collect.rs:40-59: extraction is a pure
-    function of the text). distinct per turn (a collected entity
-    appears once per file in the reference)."""
-    return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.regexp_extract_all("text", F.lit(CAMEL_RE), 0)).alias("name"),
-    ).distinct()
-
-
-def typed_entity_candidates(transcripts: DataFrame, entities: DataFrame) -> DataFrame:
-    """Candidates typed by exact canonical-name match against the
-    entity dictionary (case-sensitive, as find_nodes_by_name is) ->
-    (conv_id, turn_idx, name, entity_id, entity_type). Candidates
-    whose name is not a known entity simply stay untyped (dropped
-    here); the extraction query surfaces them regardless."""
-    dim = F.broadcast(entities.selectExpr("canonical_name AS name", "entity_id", "entity_type"))
-    return extract_entity_candidates(transcripts).join(dim, "name")
-
-
-def extract_var_defs(transcripts: DataFrame) -> DataFrame:
-    """-> (conv_id, turn_idx, vname): var declaration occurrences
-    (the tool parameter binding), name q_<tool>."""
-    # zero-alloc contains() guard on the regex's literal prefix
-    # (operators/extract.py doc): skips the per-row String copy +
-    # Matcher for every turn without a tool invocation
-    return transcripts.where(F.col("text").contains("tool:")).select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.regexp_extract_all("text", F.lit(VARDECL_RE), 1)).alias("tool"),
-    ).selectExpr("conv_id", "turn_idx", f"'{VAR_PREFIX}' || tool AS vname")
-
-
-def bucket_first_var_defs(transcripts: DataFrame) -> DataFrame:
-    """-> (vname, d_conv, d_turn): the FIRST declaring turn of each
-    var per Directory bucket — the var's defining site (one Var node
-    per (bucket, name), like first_test_defs' global pick).
-    Struct-min aggregate (map-side combine), parallelism-invariant.
-    Cross-conversation within a bucket => a GLOBALS-unit family for
-    the resumable builder."""
-    return (
-        extract_var_defs(transcripts)
-        .selectExpr(f"substring(conv_id, 1, {BUCKET_LEN}) AS vbucket", "vname", "conv_id", "turn_idx")
-        .groupBy("vbucket", "vname")
-        .agg(F.expr("min(struct(conv_id, turn_idx)) AS f"))
-        .selectExpr("vname", "f.conv_id AS d_conv", "f.turn_idx AS d_turn")
-    )
-
-
-def extract_var_uses(transcripts: DataFrame) -> DataFrame:
-    """-> (conv_id, turn_idx, vname): identifier USAGE occurrences of
-    declared-var surface forms, distinct per turn (found_vars is a
-    set per function, format.rs:569)."""
-    return extract_var_defs(transcripts).distinct()
-
-
-def var_usage_edges_extracted(transcripts: DataFrame) -> DataFrame:
-    """CONTAINS(Function turn -> extracted Var node) under the
-    reference's tier cascade (format.rs:577-617), applied to the
-    per-bucket extracted Var nodes:
-
-      tier 1  same file: the using turn's conversation IS the var's
-              defining conversation;
-      tier 2  imported: the conversation's import section (system-turn
-              rollup body) contains the var's name
-              (import_body.contains(&var.name), format.rs:594);
-      tier 3  same directory: the using turn's bucket == the var's
-              defining bucket (Path::parent equality over the
-              corpus/<bucket>/<conv> layout).
-
-    The var dim is tiny (buckets x tools) and broadcast; the import-
-    body join is conv_id-co-partitioned. Accept = tier1 OR tier2 OR
-    tier3, distinct per (turn, var) — the reference `continue`s after
-    the first accepting tier, so multiple accepting tiers still yield
-    one edge. -> (conv_id, turn_idx, vname, d_conv, d_turn).
-    """
-    uses = extract_var_uses(transcripts).selectExpr(
-        "conv_id", "turn_idx", "vname", f"substring(conv_id, 1, {BUCKET_LEN}) AS ubucket"
-    )
-    vars_dim = F.broadcast(
-        bucket_first_var_defs(transcripts).selectExpr(
-            "vname", "d_conv", "d_turn", f"substring(d_conv, 1, {BUCKET_LEN}) AS vbucket"
-        )
-    )
-    # Tier 2 ('import body contains var name') WITHOUT building the
-    # per-conversation body string: var names contain no newline, so
-    # substring-of-the-newline-joined-import-rollup is exactly
-    # substring-of-some-system-turn. Evaluated only for (conv, vname)
-    # pairs that are actual use-candidates, as a conv_id EQUI-join of
-    # those pairs against the conversation's own system turns with
-    # the contains() as a post-filter — co-partitioned, no string
-    # rollup, no nested-loop join. (The DuckDB oracle states the same
-    # tier over the rolled import body; outputs are provably equal.)
-    cand = uses.join(vars_dim, "vname")
-    cand_cv = cand.select("conv_id", "vname").distinct()
-    imp_hits = (
-        cand_cv.join(transcripts.where("role = 'system'").select("conv_id", "text"), "conv_id")
-        .where(F.expr("contains(text, vname)"))
-        .select("conv_id", "vname")
-        .distinct()
-        .withColumn("imported", F.lit(1))
-    )
-    return (
-        cand.join(imp_hits, ["conv_id", "vname"], "left")
-        .where(
-            "(conv_id = d_conv)"          # tier 1: same file
-            " OR (imported IS NOT NULL)"  # tier 2: imported
-            " OR (ubucket = vbucket)"     # tier 3: same directory
-        )
-        .select("conv_id", "turn_idx", "vname", "d_conv", "d_turn")
-        .distinct()
-    )
-
-
-def return_type_datamodels(transcripts: DataFrame, ent_nodes: DataFrame) -> DataFrame:
-    """CONTAINS(Function turn -> Datamodel) from capitalized type
-    identifiers in the turn's return section, resolved by exact name
-    against Datamodel nodes (format.rs:621-644: is_capitalized gate,
-    definition lookup, accept only DataModel targets).
-    -> (conv_id, turn_idx, dm_key)."""
-    ret = RETURN_SECTION_SQL.format(t="text")
-    idents = transcripts.selectExpr("conv_id", "turn_idx", f"{ret} AS ret").select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.regexp_extract_all("ret", F.lit(CAPIDENT_RE), 0)).alias("name"),
-    )
-    dm = F.broadcast(
-        ent_nodes.where(F.col("node_type") == "Datamodel").select(
-            "name", F.col("node_key").alias("dm_key")
-        )
-    )
-    return idents.join(dm, "name").select("conv_id", "turn_idx", "dm_key").distinct()
-
-
 # ---------------------------------------------------------------------------
 # Planted parity dims — one literal turn set exercising every collect
-# extractor with non-empty results (the corpus itself produces no
+# rule with non-empty results (the corpus itself produces no
 # return-type hit, so the driver-gated query runs over these; the
 # same rows feed the DuckDB oracle).
 # ---------------------------------------------------------------------------

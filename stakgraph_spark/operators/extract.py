@@ -76,36 +76,28 @@ def extract_tool_calls(transcripts: DataFrame) -> DataFrame:
 
 def extract_requests(transcripts: DataFrame, pack: dict | None = None) -> DataFrame:
     """-> (conv_id, turn_idx, verb, path, norm_path), one row per
-    request occurrence (multi-match: full-match extract_all, then
-    verb/path split on the first space).
+    request occurrence: a projection of the fact table
+    (materialize.turn_facts), which takes every `VERB /path` match and
+    splits verb and path on the first space.
 
     norm_path applies the normalize_backend_path rewrite chain
-    (linker.rs:195-230, functions/paths.py). WHICH template-var
-    styles rewrite is dialect data: a pack's request_styles names the
-    BACKEND_RULES_NAMED subset its framework writes, plus the
-    pseudo-style 'numseg' for corpora that write concrete numeric ids
-    as their template-var form (`/123` -> `/:param` — the
-    transcriptish dialect's own style; the reference's linker has no
-    such rule, which is exactly why it belongs in pack data rather
-    than the engine). pack=None keeps the transcriptish default:
-    numseg + the full chain. The build matches requests to endpoints
-    with the same rendering (materialize.turn_facts: a filter over
-    the endpoint array on verb, segment count and paths_match);
+    (linker.rs:195-230, functions/paths.py) in norm_path_sql's
+    rendering. WHICH template-var styles rewrite is dialect data: a
+    pack's request_styles names the BACKEND_RULES_NAMED subset its
+    framework writes, plus the pseudo-style 'numseg' for corpora that
+    write concrete numeric ids as their template-var form (`/123` ->
+    `/:param` — the transcriptish dialect's own style; the reference's
+    linker has no such rule, which is exactly why it belongs in pack
+    data rather than the engine). pack=None keeps the transcriptish
+    default: numseg + the full chain. The edges match normalized
+    requests to endpoints (materialize._eps_sql: a filter over the
+    endpoint array on verb, segment count and paths_match);
     concrete-vs-:param segment matching is exercised by the
     kg_paths_match planted-dim query.
     """
-    norm = norm_path_sql("path", pack)
-    # every "VERB /path" match contains ' /' — zero-alloc guard
-    return transcripts.where(F.col("text").contains(" /")).selectExpr(
-        "conv_id",
-        "turn_idx",
-        f"explode(regexp_extract_all(text, '{REQUEST_RE}', 0)) AS m",
-    ).selectExpr(
-        "conv_id",
-        "turn_idx",
-        "split_part(m, ' ', 1) AS verb",
-        "split_part(m, ' ', 2) AS path",
-    ).selectExpr("conv_id", "turn_idx", "verb", "path", f"{norm} AS norm_path")
+    from .materialize import request_rows, turn_facts
+
+    return request_rows(turn_facts(transcripts, pack))
 
 
 def norm_path_sql(path: str, pack: dict | None = None) -> str:
@@ -121,16 +113,6 @@ def norm_path_sql(path: str, pack: dict | None = None) -> str:
         styles = [s for s in st if s != "numseg"]
     inner = f"regexp_replace({path}, '{NUMSEG_RE}', '/:param')" if numseg else path
     return normalize_backend_path_sql(inner, "spark", styles=styles)
-
-
-def extract_test_refs(transcripts: DataFrame) -> DataFrame:
-    """-> (conv_id, turn_idx, tid): `ref test_<k>` references
-    (extract_test_ids analog, linker.rs:115-127); all refs per turn."""
-    return transcripts.where(F.col("text").contains("ref test_")).select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.regexp_extract_all("text", F.lit(TESTREF_RE), 1)).alias("tid"),
-    )
 
 
 def extract_test_defs(transcripts: DataFrame) -> DataFrame:

@@ -14,106 +14,100 @@ Reproduces the reference's heuristic call-resolution semantics
           (same-directory-unique analog collapsed to a total order
           so output is parallelism-invariant).
 
-Best candidate per mention = row_number over
-(conv_id, turn_idx, surface) ordered by (score DESC, entity_id ASC).
-Case-only variants never match: the dictionary join is exact and
+Best candidate per mention = highest tier, then lowest entity_id.
+Case-only variants never match: the alias lookup is exact and
 case-sensitive (call_finder.rs:175 rejects case-variants).
+
+One expression scores every mention (`resolve_sql`). The static
+dictionary enters it as two map literals (alias -> candidate ids
+ascending; alias -> its tier-3 candidate), and the tier-2 evidence
+is an array column: the tier-3 picks of every mention in the
+conversation (`unamb_sql`, collected by one window over conv_id).
+The build's fact table (materialize.turn_facts) evaluates it per
+turn; link_mentions applies it to a mention stream.
 
 Scale notes
 -----------
-* The dictionary is broadcast (it is the small dim). Mention->dict
-  is therefore shuffle-free.
-* The same-conv tier joins mentions to the unambiguous-mention set
-  on (conv_id, entity_id): both sides are produced from data already
-  partitioned by conv_id, so AQE plans a co-partitioned join.
+* No join and no shuffle: the dictionary is a literal inside the
+  projection, and the conv_id window (like link_mentions' per-turn
+  group-by) reuses the derivation's conv_id partitioning.
 * Hot aliases (the planted Zipf head: entity 0 appears in ~40% of
-  mention turns) do NOT skew this stage because the heavy join is
-  broadcast; the skew surfaces downstream in per-entity aggregations,
-  which pre-aggregate per (conv_id, entity) before the global
-  rollup (salted two-phase agg in materialize.uses_by_entity).
+  mention turns) cost a map lookup per mention, whatever their
+  frequency; the skew surfaces downstream in per-entity
+  aggregations, which pre-aggregate per (conv_id, entity) before the
+  global rollup (materialize.uses_by_entity).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import lru_cache
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import entities as E
 
 
-def dictionary(spark: SparkSession) -> DataFrame:
-    """(alias, entity_id, canonical_name, entity_type, is_mock) —
-    distinct alias->entity candidate rows."""
-    al = E.aliases_df(spark).select("alias", "entity_id").distinct()
-    en = E.entities_df(spark)
-    return al.join(en, "entity_id").select(
-        "alias",
-        "entity_id",
-        "canonical_name",
-        "entity_type",
-        F.when(F.lower(F.col("canonical_name")).like("%mock%"), F.lit(1)).otherwise(0).alias("is_mock"),
-    )
+@lru_cache(maxsize=1)
+def _alias_maps() -> tuple[str, str]:
+    """(alias -> candidate entity ids ascending, alias -> tier-3
+    candidate) as SQL map literals."""
+    names = {i: n for i, n, _ in E.ENTITIES}
+    cands: dict[str, set[int]] = {}
+    for eid, _aidx, alias in E.ALIASES:
+        if eid in names:
+            cands.setdefault(alias, set()).add(eid)
+    unamb: dict[str, int] = {}
+    for alias, eids in cands.items():
+        nonmock = [e for e in eids if "mock" not in names[e].lower()]
+        if len(eids) == 1:
+            unamb[alias] = min(eids)
+        elif len(nonmock) == 1:
+            unamb[alias] = nonmock[0]
+    return E._map_sql({a: sorted(e) for a, e in cands.items()}), E._map_sql(unamb)
 
 
-def alias_stats(dct: DataFrame) -> DataFrame:
-    return dct.groupBy("alias").agg(
-        F.count("*").cast("int").alias("n_all"),
-        F.sum(F.lit(1) - F.col("is_mock")).cast("int").alias("n_nonmock"),
+def unamb_sql(surfaces: str) -> str:
+    """The tier-3 candidates of the array of surfaces `surfaces`
+    (the same-conversation evidence of tier 2). -> array<int>."""
+    unamb = _alias_maps()[1]
+    return f"filter(transform({surfaces}, s -> try_element_at({unamb}, s)), e -> e IS NOT NULL)"
+
+
+def resolve_sql(surfaces: str, conv_unamb: str) -> str:
+    """The best candidate of each surface in the array `surfaces`
+    (distinct), given the conversation's tier-3 picks `conv_unamb`:
+    the tier-3 candidate if the alias has one (score 3); else the
+    lowest candidate id among `conv_unamb` (score 2); else the lowest
+    candidate id (score 1). Unknown aliases resolve to nothing.
+    -> array<struct<surface, entity_id, score>>."""
+    cands, unamb = _alias_maps()
+    tier2 = f"filter(x.c, c -> array_contains({conv_unamb}, c))"
+    looked_up = (
+        f"transform({surfaces}, s -> named_struct('surface', s, "
+        f"'u', try_element_at({unamb}, s), 'c', try_element_at({cands}, s)))"
     )
+    best = (
+        f"transform({looked_up}, x -> named_struct('surface', x.surface, "
+        f"'entity_id', coalesce(x.u, try_element_at({tier2}, 1), try_element_at(x.c, 1)), "
+        f"'score', CASE WHEN x.u IS NOT NULL THEN 3 WHEN size({tier2}) > 0 THEN 2 ELSE 1 END))"
+    )
+    return f"filter({best}, r -> r.entity_id IS NOT NULL)"
 
 
 def link_mentions(spark: SparkSession, mentions: DataFrame) -> DataFrame:
     """mentions(conv_id, turn_idx, surface) ->
-    resolved(conv_id, turn_idx, surface, entity_id, score)."""
-    dct = dictionary(spark)
-    stats = alias_stats(dct)
-    dim = F.broadcast(dct.join(stats, "alias"))
-
-    cand = mentions.join(dim, mentions["surface"] == dim["alias"]).select(
-        "conv_id", "turn_idx", "surface", "entity_id", "is_mock", "n_all", "n_nonmock"
-    )
-
-    # Unambiguous same-conv evidence, built from mentions x a
-    # broadcast "unambiguous alias -> entity" dim (NOT from cand —
-    # that would put the candidate subtree on both sides of the later
-    # join and double-compute it within a single action).
-    unamb_dim = F.broadcast(
-        dct.join(stats, "alias")
-        .where((F.col("n_all") == 1) | ((F.col("n_nonmock") == 1) & (F.col("is_mock") == 0)))
-        .select(F.col("alias").alias("u_alias"), F.col("entity_id").alias("u_entity_id"))
-    )
-    unamb = (
-        mentions.join(unamb_dim, mentions["surface"] == F.col("u_alias"))
-        .select("conv_id", F.col("u_entity_id").alias("entity_id"))
-        .distinct()
-        .withColumn("in_conv", F.lit(1))
-    )
-
-    scored = cand.join(unamb, ["conv_id", "entity_id"], "left").selectExpr(
-        "conv_id",
-        "turn_idx",
-        "surface",
-        "entity_id",
-        """CASE WHEN n_all = 1 THEN 3
-                WHEN n_nonmock = 1 AND is_mock = 0 THEN 3
-                WHEN in_conv IS NOT NULL THEN 2
-                ELSE 1 END AS score""",
-    )
-
-    # Best candidate = max by (score DESC, entity_id ASC), expressed
-    # as a lexicographic struct-max aggregate instead of a window
-    # row_number: aggregates get map-side partial combine, so the
-    # shuffle carries one row per (mention, partition) instead of
-    # every scored candidate — the difference that matters when a hot
-    # alias has many candidates.
+    resolved(conv_id, turn_idx, surface, entity_id, score): the
+    mentions grouped per turn, one conv_id window for the tier-2
+    evidence, then resolve_sql."""
     return (
-        scored.groupBy("conv_id", "turn_idx", "surface")
-        .agg(F.expr("max(struct(score, -entity_id AS neg_eid, entity_id AS eid)) AS best"))
+        mentions.groupBy("conv_id", "turn_idx")
+        .agg(F.collect_set("surface").alias("surfaces"))
         .selectExpr(
             "conv_id",
             "turn_idx",
-            "surface",
-            "best.eid AS entity_id",
-            "best.score AS score",
+            "surfaces",
+            f"flatten(collect_set({unamb_sql('surfaces')}) OVER (PARTITION BY conv_id)) AS conv_unamb",
         )
+        .selectExpr("conv_id", "turn_idx", f"inline({resolve_sql('surfaces', 'conv_unamb')})")
     )

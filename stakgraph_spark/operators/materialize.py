@@ -19,16 +19,18 @@ Identity follows the reference exactly: node_key recipe
 edge write is CREATE not MERGE (neo4j_utils.rs:169-175), so dedup
 MUST happen here.
 
-Plan shape. Every edge family that reads turn text comes out of ONE
-per-turn fact table (`turn_facts`), computed in a single pass over
+Plan shape. Everything read from turn text comes out of ONE per-turn
+fact table (`turn_facts`), computed in a single pass over
 `transcripts`: the regex extractions, the tiered mention resolution
-(link.py's scorer, evaluated with the conversation-level evidence
-from one window over conv_id), the tool, request->endpoint, test-ref,
-var-use and return-type lookups. The static dictionary (entity keys,
-canonical map, alias candidates, tool/Datamodel names, endpoint
-templates) enters as SQL map/array literals evaluated inside that
-projection, so no dictionary join, broadcast or LocalTableScan
-remains on the turn path.
+(link.resolve_sql, evaluated with the conversation-level evidence
+from one window over conv_id), request normalization, and the tool,
+test-ref, var-use and return-type lookups. The static dictionary
+(entity keys, canonical map, alias candidates, tool/Datamodel names,
+endpoint templates) enters as SQL map/array literals evaluated inside
+the projections, so no dictionary join, broadcast or LocalTableScan
+remains on the turn path. The query surface (mentions, resolved
+mentions, requests, the kg_collect rows) is a projection of the same
+table.
 
   local_edges    the 13 bucket-local families: one explode of an
                  array<struct<edge_type, source_key, target_key>> per
@@ -37,9 +39,14 @@ remains on the turn path.
   global_picks   the cross-conversation picks (role and bucket
                  strata, bucket-first var definitions, first/last
                  request per endpoint) as ONE aggregate.
-  global_edges   families of the picks and of first_def, plus the
-                 per-turn test-ref / var-use families joined to them
-                 (one broadcast), plus the static dictionary edges.
+  linked_refs    the per-turn test refs and var uses joined to
+                 first_def and the var picks (one broadcast).
+  global_edges   families of the picks, first_def and linked_refs,
+                 plus the static dictionary edges.
+
+Request -> endpoint matching (`_eps_sql`) runs only where an edge
+family reads it: CALLS Request -> Endpoint and the endpoint picks of
+HANDLER.
 
 Nodes use the same split: local_nodes (conversation rollups, turns,
 requests) and global_nodes (picks, first_def, static dictionary).
@@ -62,7 +69,7 @@ Edge vocabulary — all 12 reference EdgeTypes (mod.rs:71-88):
             turn->request (builder scaffold, core.rs:46-90);
             conv->extracted Var (get_vars scaffold); turn Function->
             Var under the same-file/imported/same-dir tier cascade
-            (format.rs:561-617, operators/collect.py); turn Function
+            (format.rs:561-617, linked_refs); turn Function
             -> Datamodel from return-section type identifiers
             (format.rs:621-644)
   USES      turn -> canonical entity (linked mention, plus per-turn
@@ -98,6 +105,7 @@ from ..functions.keys import node_key_py, node_key_sql
 from ..functions.paths import _pat, n_segments_sql, paths_match_sql
 from ..sources import entities as E
 from . import extract as X
+from . import link as L
 from .collect import CAMEL_RE, CAPIDENT_RE, RETURN_SECTION_SQL, VAR_PREFIX, VARDECL_RE
 
 REPO_KEY = "repository-corpus-corpus-0"
@@ -339,40 +347,17 @@ def static_edges(spark: SparkSession) -> DataFrame:
 # Static dims as SQL literals
 # ---------------------------------------------------------------------------
 
-def _map_sql(d: dict) -> str:
-    """A map literal (constant-folded by Catalyst into one Literal)."""
-    return "map(" + ", ".join(
-        f"{E._sql_lit(k)}, {E._sql_lit(v)}" for k, v in sorted(d.items())
-    ) + ")"
-
-
 class _Dims:
-    """Every static dictionary lookup of the turn path, as literals."""
+    """Every static dictionary lookup of the turn path, as literals
+    (the alias maps of mention resolution live in link.py)."""
 
     def __init__(self) -> None:
         rows = _entity_rows()
         key = {r[4]: r[0] for r in rows}
-        self.key = _map_sql(key)
-        self.canon_key = _map_sql({r[4]: key[r[5]] for r in rows})
-        self.type = _map_sql({r[4]: r[1] for r in rows})
-
-        # link.py's dictionary: alias -> its candidate entities, and
-        # the one candidate a mention of that alias resolves to at
-        # tier 3 (globally unique, or unique after excluding mocks)
-        names = {i: n for i, n, _ in E.ENTITIES}
-        cands: dict[str, set[int]] = {}
-        for eid, _aidx, alias in E.ALIASES:
-            if eid in names:
-                cands.setdefault(alias, set()).add(eid)
-        unamb: dict[str, int] = {}
-        for alias, eids in cands.items():
-            nonmock = [e for e in eids if "mock" not in names[e].lower()]
-            if len(eids) == 1:
-                unamb[alias] = min(eids)
-            elif len(nonmock) == 1:
-                unamb[alias] = nonmock[0]
-        self.alias_cands = _map_sql({a: sorted(e) for a, e in cands.items()})
-        self.alias_unamb = _map_sql(unamb)
+        self.key = E._map_sql(key)
+        self.canon_key = E._map_sql({r[4]: key[r[5]] for r in rows})
+        self.type = E._map_sql({r[4]: r[1] for r in rows})
+        self.name = E._map_sql({r[4]: r[2] for r in rows})
 
         def by_name(pairs) -> dict:
             out: dict[str, list] = {}
@@ -380,12 +365,12 @@ class _Dims:
                 out.setdefault(name, []).append(v)
             return out
 
-        # CamelCase candidates typed by exact canonical name
-        # (collect.typed_entity_candidates), tool calls by tool name,
-        # return-section identifiers by Datamodel name
-        self.name_ids = _map_sql(by_name((n, i) for i, n, _ in E.ENTITIES))
-        self.tool_keys = _map_sql(by_name((n, key[i]) for i, n, _ in E.TOOLS))
-        self.dm_keys = _map_sql(by_name((r[2], r[0]) for r in rows if r[1] == "Datamodel"))
+        # CamelCase candidates typed by exact canonical name (as
+        # find_nodes_by_name is: case-sensitive), tool calls by tool
+        # name, return-section identifiers by Datamodel name
+        self.name_ids = E._map_sql(by_name((n, i) for i, n, _ in E.ENTITIES))
+        self.tool_keys = E._map_sql(by_name((n, key[i]) for i, n, _ in E.TOOLS))
+        self.dm_keys = E._map_sql(by_name((r[2], r[0]) for r in rows if r[1] == "Datamodel"))
         # endpoint templates for link_api_nodes (linker.rs:129-163)
         eps = []
         for i, v, s in E.ENDPOINTS:
@@ -424,20 +409,15 @@ def _extract_sql(text: str, regex: str, group: int, guard: str | None) -> str:
     return f"CASE WHEN contains({text}, '{guard}') THEN {ext} ELSE CAST(array() AS ARRAY<STRING>) END"
 
 
-def _resolve_sql(surfaces: str) -> str:
-    """link.link_mentions' best candidate per surface, as an
-    expression: the tier-3 candidate if the alias has one; else the
-    lowest candidate id with an unambiguous mention in the same
-    conversation (tier 2, `conv_unamb`); else the lowest candidate id
-    (tier 1). Unknown aliases resolve to nothing. -> array<int>."""
-    d = _dims()
-    cands = _lookup(d.alias_cands, "s")
-    best = (
-        f"coalesce({_lookup(d.alias_unamb, 's')}, "
-        f"try_element_at(filter({cands}, c -> array_contains(conv_unamb, c)), 1), "
-        f"try_element_at({cands}, 1))"
+def _eps_sql(r: str) -> str:
+    """Endpoint ids the request struct `r` (verb, norm) calls
+    (link_api_nodes, linker.rs:129-163, 241-266): a filter over the
+    endpoint templates on verb, segment count and paths_match."""
+    return (
+        f"transform(filter({_dims().endpoints}, ep -> ep.verb = {r}.verb"
+        f" AND ep.nseg = {n_segments_sql(f'{r}.norm', 'spark')}"
+        f" AND {paths_match_sql(f'{r}.norm', 'ep.epath', 'spark')}), ep -> ep.eid)"
     )
-    return f"array_distinct(filter(transform({surfaces}, s -> {best}), e -> e IS NOT NULL))"
 
 
 # ---------------------------------------------------------------------------
@@ -445,22 +425,24 @@ def _resolve_sql(surfaces: str) -> str:
 # ---------------------------------------------------------------------------
 
 def turn_facts(transcripts: DataFrame, pack: dict | None = None) -> DataFrame:
-    """One row per turn, in one pass over `transcripts` (scan, three
+    """One row per turn, in one pass over `transcripts` (scan, four
     projections and one window over conv_id — shuffle-free under the
     derivation's conv_id partitioning):
 
       conv_id, turn_idx, role, tool, bucket, turn_key, conv_key
       t_first, istart   the conversation's first turn and first
                         system turn (Import start)
-      ents       resolved entity ids of the turn's '@alias' mentions
+      surfaces   distinct '@alias' mentions
+      res        array<struct<surface, entity_id, score>>: each
+                 mention's resolution (link.resolve_sql)
+      ents       distinct resolved entity ids
       t0_ents    resolved entity ids of the conversation's turn 0
                  (its import set)
       cands      CamelCase candidates typed by canonical name
       tool_keys  node keys of the called tool Libraries
-      reqs       array<struct<verb, path, key, eps>>: each request,
-                 its node key and its matched endpoint ids
-                 (verb + segment count + paths_match, linker.rs:
-                 129-163, 241-266)
+      reqs       array<struct<verb, path, norm, key>>: each request
+                 occurrence, its normalized path (extract.norm_path_sql)
+                 and its node key
       tids       referenced test ids
       vnames     declared var names (every occurrence)
       vuses      array<struct<vname, imported>>: distinct var uses;
@@ -475,14 +457,6 @@ def turn_facts(transcripts: DataFrame, pack: dict | None = None) -> DataFrame:
     d = _dims()
     w = "OVER (PARTITION BY conv_id)"
     ret = RETURN_SECTION_SQL.format(t="text")
-    unamb = f"filter(transform(surfaces, s -> {_lookup(d.alias_unamb, 's')}), e -> e IS NOT NULL)"
-    # every var name starts with VAR_PREFIX (collect.extract_var_defs),
-    # so a system turn without it can import none
-    ep_match = (
-        f"transform(filter({d.endpoints}, ep -> ep.verb = r.verb"
-        f" AND ep.nseg = {n_segments_sql('r.norm', 'spark')}"
-        f" AND {paths_match_sql('r.norm', 'ep.epath', 'spark')}), ep -> ep.eid)"
-    )
     return (
         transcripts.selectExpr(
             "conv_id",
@@ -503,33 +477,42 @@ def turn_facts(transcripts: DataFrame, pack: dict | None = None) -> DataFrame:
             " AS vnames",
             f"array_distinct({_lookup_all(_extract_sql(ret, CAPIDENT_RE, 0, None), d.dm_keys)})"
             " AS dm_keys",
+            # every var name starts with VAR_PREFIX, so a system turn
+            # without it can import none
             f"CASE WHEN role = 'system' AND contains(text, '{VAR_PREFIX}') THEN text END AS imp_text",
         )
         .selectExpr(
             "*",
-            f"flatten(collect_set({unamb}) {w}) AS conv_unamb",
+            f"flatten(collect_set({L.unamb_sql('surfaces')}) {w}) AS conv_unamb",
             f"flatten(collect_set(CASE WHEN turn_idx = 0 THEN surfaces END) {w}) AS t0_surfaces",
             f"min(turn_idx) {w} AS t_first",
             f"min(CASE WHEN role = 'system' THEN turn_idx END) {w} AS istart",
             f"collect_set(imp_text) {w} AS imp_texts",
-            "transform(reqs_raw, r -> named_struct('verb', r.verb, 'path', r.path, "
-            f"'norm', {X.norm_path_sql('r.path', pack)})) AS reqs_norm",
         )
         .selectExpr(
             "conv_id", "turn_idx", "role", "tool", "bucket", "turn_key", "conv_key",
-            "t_first", "istart", "cands", "tool_keys", "tids", "vnames", "dm_keys",
-            f"{_resolve_sql('surfaces')} AS ents",
-            f"{_resolve_sql('t0_surfaces')} AS t0_ents",
-            "transform(reqs_norm, r -> named_struct('verb', r.verb, 'path', r.path, "
-            f"'key', {_request_key_sql('conv_id', 'turn_idx', 'r.path', 'r.verb')}, "
-            f"'eps', {ep_match})) AS reqs",
+            "t_first", "istart", "surfaces", "cands", "tool_keys", "tids", "vnames", "dm_keys",
+            f"{L.resolve_sql('surfaces', 'conv_unamb')} AS res",
+            f"transform({L.resolve_sql('t0_surfaces', 'conv_unamb')}, r -> r.entity_id) AS t0_ents",
+            "transform(reqs_raw, r -> named_struct('verb', r.verb, 'path', r.path, "
+            f"'norm', {X.norm_path_sql('r.path', pack)}, "
+            f"'key', {_request_key_sql('conv_id', 'turn_idx', 'r.path', 'r.verb')})) AS reqs",
             "transform(array_distinct(vnames), v -> named_struct('vname', v, "
             "'imported', exists(imp_texts, t -> contains(t, v)))) AS vuses",
         )
+        .selectExpr("*", "array_distinct(transform(res, r -> r.entity_id)) AS ents")
     )
 
 
-def global_picks(facts: DataFrame) -> DataFrame:
+def request_rows(facts: DataFrame) -> DataFrame:
+    """-> (conv_id, turn_idx, verb, path, norm_path): the fact table's
+    requests, one row per occurrence."""
+    return facts.selectExpr("conv_id", "turn_idx", "inline(reqs)").selectExpr(
+        "conv_id", "turn_idx", "verb", "path", "norm AS norm_path"
+    )
+
+
+def global_picks(facts: DataFrame, handlers: bool) -> DataFrame:
     """The cross-conversation picks, one aggregate over the facts ->
     (kind, grp, name, lo, hi), lo/hi = min/max struct(conv_id,
     turn_idx) of the group:
@@ -537,10 +520,11 @@ def global_picks(facts: DataFrame) -> DataFrame:
       role  name = a role (Language stratum)
       dir   name = a bucket (Directory stratum)
       var   grp = bucket, name = var name: lo is the bucket-FIRST
-            declaring turn, the var's defining site (collect.
-            bucket_first_var_defs)
+            declaring turn, the var's defining site (one Var node per
+            (bucket, name))
       ep    name = endpoint id: lo/hi the first/last referencing
-            turn (handler_finder, mod.rs:208-223)
+            turn (handler_finder, mod.rs:208-223); only with
+            `handlers` — the nodes read no endpoint pick
 
     A struct-min/max aggregate, not a window: map-side partial
     combine, parallelism-invariant."""
@@ -550,16 +534,82 @@ def global_picks(facts: DataFrame) -> DataFrame:
             "'at', struct(conv_id, turn_idx))"
         )
 
-    return (
-        facts.selectExpr(
-            f"inline(concat(array({pick('role', NULL_S, 'role')}, {pick('dir', NULL_S, 'bucket')}), "
-            f"transform(vnames, v -> {pick('var', 'bucket', 'v')}), "
-            f"flatten(transform(reqs, r -> transform(r.eps, e -> "
-            f"{pick('ep', NULL_S, 'CAST(e AS STRING)')})))))"
+    picks = [
+        f"array({pick('role', NULL_S, 'role')}, {pick('dir', NULL_S, 'bucket')})",
+        f"transform(vnames, v -> {pick('var', 'bucket', 'v')})",
+    ]
+    if handlers:
+        picks.append(
+            f"flatten(transform(reqs, r -> transform({_eps_sql('r')}, e -> "
+            f"{pick('ep', NULL_S, 'CAST(e AS STRING)')})))"
         )
+    return (
+        facts.selectExpr(f"inline(concat({', '.join(picks)}))")
         .groupBy("kind", "grp", "name")
         .agg(F.expr("min(at) AS lo"), F.expr("max(at) AS hi"))
     )
+
+
+def linked_refs(facts: DataFrame, first_def: DataFrame, picks: DataFrame) -> DataFrame:
+    """The per-turn links to the picks, one broadcast join ->
+    (kind, conv_id, turn_idx, turn_key, name, d_conv, d_turn):
+
+      test  a referenced test id -> its defining turn in first_def
+            (the shared-test-id link, linker.rs:56-127)
+      var   a used var -> each var pick (defining site) the tier
+            cascade accepts (format.rs:577-617): same file, imported,
+            or same directory
+
+    One row per (turn, kind, name, defining site): tids and vuses are
+    distinct per turn, and the dims are unique per (kind, name) and,
+    for vars, bucket."""
+    dims = first_def.selectExpr(
+        "'test' AS kind", "tid AS name", "d_conv", "d_turn", f"{NULL_S} AS vbucket"
+    ).unionByName(
+        picks.where("kind = 'var'").selectExpr(
+            "kind", "name", "lo.conv_id AS d_conv", "lo.turn_idx AS d_turn", "grp AS vbucket"
+        )
+    )
+    refs = facts.selectExpr(
+        "conv_id", "turn_idx", "bucket", "turn_key",
+        "inline(concat("
+        "transform(tids, t -> named_struct('kind', 'test', 'name', t, 'imported', false)), "
+        "transform(vuses, v -> named_struct('kind', 'var', 'name', v.vname, 'imported', v.imported))))",
+    )
+    return (
+        refs.join(F.broadcast(dims), ["kind", "name"])
+        .where("kind = 'test' OR conv_id = d_conv OR imported OR bucket = vbucket")
+        .select("kind", "conv_id", "turn_idx", "turn_key", "name", "d_conv", "d_turn")
+    )
+
+
+def collect_rows(transcripts: DataFrame) -> DataFrame:
+    """The per-turn collection as projections of the fact table ->
+    (kind, turn_id, name, info):
+
+      candidate    a typed CamelCase candidate: entity name and type
+      var_def      a var's bucket-first defining turn (var pick):
+                   var name and defining conversation
+      var_use      a var use the tier cascade accepts (linked_refs):
+                   var name and defining conversation
+      return_type  a return-section Datamodel: its node key"""
+    d = _dims()
+    facts = turn_facts(transcripts)
+    picks = global_picks(facts, handlers=False)
+    cand = facts.selectExpr("turn_idx", "explode(cands) AS e").selectExpr(
+        "'candidate' AS kind", "turn_idx AS turn_id",
+        f"{_lookup(d.name, 'e')} AS name", f"{_lookup(d.type, 'e')} AS info",
+    )
+    vdef = picks.where("kind = 'var'").selectExpr(
+        "'var_def' AS kind", "lo.turn_idx AS turn_id", "name", "lo.conv_id AS info"
+    )
+    vuse = linked_refs(facts, X.first_test_defs(transcripts), picks).where("kind = 'var'").selectExpr(
+        "'var_use' AS kind", "turn_idx AS turn_id", "name", "d_conv AS info"
+    )
+    ret = facts.selectExpr(
+        "'return_type' AS kind", "turn_idx AS turn_id", "explode(dm_keys) AS name", "'Datamodel' AS info"
+    )
+    return cand.unionByName(vdef).unionByName(vuse).unionByName(ret)
 
 
 # ---------------------------------------------------------------------------
@@ -574,10 +624,7 @@ def global_picks(facts: DataFrame) -> DataFrame:
 # cross-bucket pick like the first defining turn).
 # ---------------------------------------------------------------------------
 
-_ROLLED = (
-    "array_join(transform(array_sort(collect_list(struct(turn_idx, text))), "
-    "x -> x.text), chr(10))"
-)
+_ROLLED = "array_join(transform(array_sort(collect_list({rows})), x -> x.text), chr(10))"
 
 
 def _pad(body="''", docs=NULL_S, hash_=NULL_S, data_type=NULL_S, meta="''"):
@@ -594,52 +641,42 @@ def local_nodes(spark: SparkSession, transcripts: DataFrame, requests: DataFrame
     """File / Import / Function / Request nodes — pure functions of
     the conversation's own rows (embarrassingly parallel over conv_id
     buckets)."""
-    # File body = ordered rollup of turn texts, guarded at
-    # MAX_FILE_SIZE (builder/utils.rs:9: body dropped, node kept);
+    # One groupBy(conv_id) — it reuses the conv_id hash partitioning
+    # the derivation already produced, no shuffle — yields both
+    # conversation rollups:
+    #   File   body = ordered rollup of turn texts, guarded at
+    #          MAX_FILE_SIZE (builder/utils.rs:9: body dropped, node
+    #          kept);
+    #   Import the system-turn section (combine_import_sections
+    #          analog, builder/utils.rs:39-87: sort by start, join
+    #          with newlines), for conversations that have one.
     # hash = digest of the (post-guard) body (prepare_file_data,
-    # builder/utils.rs:90-101). groupBy(conv_id) reuses the conv_id
-    # hash partitioning the derivation already produced — no shuffle.
+    # builder/utils.rs:90-101).
     convs = (
         transcripts.groupBy("conv_id")
         .agg(
             F.expr("max(turn_idx)").alias("fend"),
-            F.expr(_ROLLED).alias("raw_body"),
+            F.expr(_ROLLED.format(rows="struct(turn_idx, text)")).alias("raw_body"),
+            F.expr("min(CASE WHEN role = 'system' THEN turn_idx END)").alias("istart"),
+            F.expr("max(CASE WHEN role = 'system' THEN turn_idx END)").alias("iend"),
+            F.expr(_ROLLED.format(rows="CASE WHEN role = 'system' THEN struct(turn_idx, text) END"))
+            .alias("ibody"),
         )
         .selectExpr(
             "conv_id",
-            "fend",
-            f"CASE WHEN length(raw_body) > {MAX_FILE_SIZE} THEN '' ELSE raw_body END AS fbody",
+            "istart",
+            "stack(2, "
+            f"{_conv_key_sql('conv_id')}, 'File', conv_id, 0, CAST(fend AS INT), "
+            f"CASE WHEN length(raw_body) > {MAX_FILE_SIZE} THEN '' ELSE raw_body END, "
+            f"'parent=' || {BUCKET_SQL}, "
+            f"{_import_key_sql('conv_id', 'istart')}, 'Import', 'imports', CAST(istart AS INT), "
+            "CAST(iend AS INT), ibody, "
+            "'parent=' || conv_id) AS (node_key, node_type, name, start, `end`, body, meta)",
         )
+        .where("node_type = 'File' OR istart IS NOT NULL")
         .selectExpr(
-            f"{_conv_key_sql('conv_id')} AS node_key",
-            "'File' AS node_type",
-            "conv_id AS name",
-            "'corpus/' || conv_id AS file",
-            "0 AS start",
-            "fend AS `end`",
-            *_pad(body="fbody", hash_="md5(fbody)", meta=f"'parent=' || {BUCKET_SQL}"),
-        )
-    )
-
-    # Import = per-conversation rollup of the system-turn section
-    # (combine_import_sections analog, builder/utils.rs:39-87: sort
-    # by start, join with newlines).
-    imports = (
-        transcripts.where("role = 'system'")
-        .groupBy("conv_id")
-        .agg(
-            F.expr("CAST(min(turn_idx) AS INT)").alias("istart"),
-            F.expr("CAST(max(turn_idx) AS INT)").alias("iend"),
-            F.expr(_ROLLED).alias("ibody"),
-        )
-        .selectExpr(
-            f"{_import_key_sql('conv_id', 'istart')} AS node_key",
-            "'Import' AS node_type",
-            "'imports' AS name",
-            "'corpus/' || conv_id AS file",
-            "istart AS start",
-            "iend AS `end`",
-            *_pad(body="ibody", hash_="md5(ibody)", meta="'parent=' || conv_id"),
+            "node_key", "node_type", "name", "'corpus/' || conv_id AS file", "start", "`end`",
+            *_pad(body="body", hash_="md5(body)", meta="meta"),
         )
     )
 
@@ -681,25 +718,24 @@ def local_nodes(spark: SparkSession, transcripts: DataFrame, requests: DataFrame
         ),
     )
 
-    return convs.unionByName(imports).unionByName(turns).unionByName(reqs)
+    return convs.unionByName(turns).unionByName(reqs)
 
 
 def global_nodes(
     spark: SparkSession,
-    transcripts: DataFrame,
+    facts: DataFrame,
     ent_nodes: DataFrame,
     first_def: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
     """Repository / Language / Directory / Var / Test / entity /
-    Instance nodes — derived from the corpus-wide picks (role and
-    bucket strata, bucket-first var definitions), the globally-first
-    test definitions, or the static dictionary."""
+    Instance nodes — derived from the corpus-wide picks of the fact
+    table (role and bucket strata, bucket-first var definitions), the
+    globally-first test definitions, or the static dictionary."""
     # Language / Directory / extracted Var nodes: one projection of
     # the picks (a Var node sits at its bucket-FIRST declaring turn)
     strata = (
-        global_picks(turn_facts(transcripts, pack))
-        .where("kind != 'ep'")
+        global_picks(facts, handlers=False)
         .selectExpr(
             "CASE kind WHEN 'role' THEN " + _lang_key_sql("name")
             + " WHEN 'dir' THEN " + _dir_key_sql("name")
@@ -753,8 +789,11 @@ def build_nodes(
     requests: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
+    """All 19 node types: local_nodes + global_nodes over the fact
+    table of `transcripts` (pipeline.build_graph composes the same two
+    over the fact table it shares with the edges)."""
     return local_nodes(spark, transcripts, requests).unionByName(
-        global_nodes(spark, transcripts, ent_nodes, first_def, pack)
+        global_nodes(spark, turn_facts(transcripts, pack), ent_nodes, first_def, pack)
     )
 
 
@@ -805,7 +844,7 @@ def _local_edges_sql() -> str:
         # CONTAINS turn -> Request
         _each("reqs", "r", "CONTAINS", "turn_key", "r.key"),
         # CALLS Request -> Endpoint (link_api_nodes)
-        f"flatten(transform(reqs, r -> {_each('r.eps', 'e', 'CALLS', 'r.key', key('e'))}))",
+        f"flatten(transform(reqs, r -> {_each(_eps_sql('r'), 'e', 'CALLS', 'r.key', key('e'))}))",
         # USES turn -> canonical entity, from resolved mentions and
         # typed CamelCase candidates alike
         _each(f"array_distinct(transform(array_union(ents, cands), e -> {_lookup(d.canon_key, 'e')}))",
@@ -855,7 +894,7 @@ def global_edges(
     scaffold and test links (the corpus-wide first_def pick), tiered
     extracted-var usage, and the static dictionary families."""
     d = _dims()
-    picks = global_picks(facts)
+    picks = global_picks(facts, handlers=True)
     at = "lo" if (pack or {}).get("handler_pick", "first") == "first" else "hi"
     strata = picks.selectExpr(
         "CASE kind WHEN 'ep' THEN 'HANDLER' ELSE 'CONTAINS' END AS edge_type",
@@ -874,37 +913,13 @@ def global_edges(
         f"{_test_key_sql('tid', 'd_conv', 'd_turn', pack)} AS target_key",
     )
 
-    # Per-turn links to the picks, one broadcast join:
-    #   CALLS Test -> referencing turn (shared-test-id link,
-    #     linker.rs:56-127);
-    #   CONTAINS turn -> extracted Var under the tier cascade
-    #     (format.rs:577-617): same file, imported, or same directory.
-    dims = first_def.selectExpr(
-        "'test' AS kind", "tid AS name", "d_conv", "d_turn", f"{NULL_S} AS vbucket"
-    ).unionByName(
-        picks.where("kind = 'var'").selectExpr(
-            "kind", "name", "lo.conv_id AS d_conv", "lo.turn_idx AS d_turn", "grp AS vbucket"
-        )
-    )
-    refs = facts.selectExpr(
-        "conv_id", "bucket", "turn_key",
-        "inline(concat("
-        "transform(tids, t -> named_struct('kind', 'test', 'name', t, 'imported', false)), "
-        "transform(vuses, v -> named_struct('kind', 'var', 'name', v.vname, 'imported', v.imported))))",
-    )
-    linked = (
-        refs.join(F.broadcast(dims), ["kind", "name"])
-        .where("kind = 'test' OR conv_id = d_conv OR imported OR bucket = vbucket")
-        .selectExpr(
-            "conv_id",
-            "CASE kind WHEN 'test' THEN 'CALLS' ELSE 'CONTAINS' END AS edge_type",
-            f"CASE kind WHEN 'test' THEN {_test_key_sql('name', 'd_conv', 'd_turn', pack)}"
-            " ELSE turn_key END AS source_key",
-            f"CASE kind WHEN 'test' THEN turn_key"
-            f" ELSE {_var_key_sql('name', 'd_conv', 'd_turn')} END AS target_key",
-        )
-        .distinct()
-        .drop("conv_id")
+    # CALLS Test -> referencing turn; CONTAINS turn -> extracted Var
+    linked = linked_refs(facts, first_def, picks).selectExpr(
+        "CASE kind WHEN 'test' THEN 'CALLS' ELSE 'CONTAINS' END AS edge_type",
+        f"CASE kind WHEN 'test' THEN {_test_key_sql('name', 'd_conv', 'd_turn', pack)}"
+        " ELSE turn_key END AS source_key",
+        f"CASE kind WHEN 'test' THEN turn_key"
+        f" ELSE {_var_key_sql('name', 'd_conv', 'd_turn')} END AS target_key",
     )
 
     return (
@@ -923,22 +938,24 @@ def build_edges(
     requests: DataFrame,
     pack: dict | None = None,
 ) -> DataFrame:
-    """All 12 edge types from one fact table (turn_facts). `resolved`,
+    """All 12 edge types: local_edges + global_edges over the fact
+    table of `transcripts` (pipeline.build_graph composes the same two
+    over the fact table it shares with the nodes). `resolved`,
     `ent_nodes` and `requests` are the pipeline's query-surface
     stages; the edge families do not read them — the fact table
-    re-derives the same facts from `transcripts` in its single pass
-    and takes the dictionary as literals — and they stay in the
-    signature for the callers that hold them.
+    carries the same facts and takes the dictionary as literals — and
+    they stay in the signature for the callers that hold them.
 
     Dedup is per arm on (src, dst, type): the local explode dedups
-    once on (conv_id, edge), the linked arm likewise, and the picks,
-    first_def and static arms are unique by construction. Arms cannot
-    collide: CONTAINS sub-families target disjoint node-type key
-    spaces; the three CALLS families have disjoint source spaces
-    (Function turns / Request keys / Test keys); OF splits into
-    entity->entity and instance->entity; IMPORTS into File->entity and
-    Class->Class. So no global dropDuplicates (test_edge_dedup_invariant
-    proves the invariant)."""
+    once on (conv_id, edge); the linked arm is unique by construction
+    (one row per turn and defining site, linked_refs), and so are the
+    picks, first_def and static arms. Arms cannot collide: CONTAINS
+    sub-families target disjoint node-type key spaces; the three CALLS
+    families have disjoint source spaces (Function turns / Request
+    keys / Test keys); OF splits into entity->entity and
+    instance->entity; IMPORTS into File->entity and Class->Class. So
+    no global dropDuplicates (test_edge_dedup_invariant proves the
+    invariant)."""
     facts = turn_facts(transcripts, pack)
     return local_edges(facts).unionByName(global_edges(spark, facts, first_def, pack))
 

@@ -7,10 +7,12 @@ joins -> global linkers. Stages are declarative DataFrame plans;
 materialization boundaries exist only at the sink (and at checkpoints
 for resume, streaming/incremental.py).
 
-Plan shape (operators/materialize.py): the edge families fan out of
-one per-turn fact table — one pass over `transcripts` that extracts,
-resolves mentions and matches requests, with the static dictionary
-as literals — through one explode for the bucket-local families and
+Plan shape (operators/materialize.py): everything read from turn
+text fans out of one per-turn fact table — one pass over
+`transcripts` that extracts and resolves mentions and normalizes
+requests, with the static dictionary as literals. The query surface
+(mentions, resolved, requests) is a projection of it; the edge
+families come through one explode for the bucket-local families and
 one aggregate of cross-conversation picks for the global ones. Spark
 shares nothing between the arms of one action: each arm re-runs the
 pass over `transcripts` (pruned to the columns it reads) and the
@@ -27,10 +29,8 @@ that partitioning without further shuffles.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators import extract as X
-from ..operators import link as L
 from ..operators import materialize as M
 from ..sources import transcripts as TS
 
@@ -71,23 +71,27 @@ def build_graph(
         # caller's `transcripts`.
         transcripts = transcripts.persist()
 
-    # mentions, resolved and requests are the query surface (and
-    # Request nodes); the edge families re-derive them inside the
-    # fact table's single pass (materialize.turn_facts).
-    mentions_raw = X.extract_mentions_raw(transcripts)
-    mentions = mentions_raw.distinct()
-    resolved = L.link_mentions(spark, mentions_raw)
+    # One fact table (materialize.turn_facts) feeds every projection:
+    # the query surface (mentions, resolved mentions with their
+    # scores, requests — also the Request nodes) and the node and
+    # edge families, composed here as in materialize.build_nodes /
+    # build_edges but over this one fact table.
+    facts = M.turn_facts(transcripts, pack)
+    mentions = facts.selectExpr("conv_id", "turn_idx", "explode(surfaces) AS surface")
+    resolved = facts.selectExpr("conv_id", "turn_idx", "inline(res)")
+    requests = M.request_rows(facts)
     ent_nodes = M.entity_nodes(spark)
     # consumed by both node and edge materialization (a plan, not a
     # result: every arm that reads it computes it)
     first_def = X.first_test_defs(transcripts)
-    requests = X.extract_requests(transcripts, pack)
     if persist_intermediates:
         resolved = resolved.persist()
         first_def = first_def.persist()
         requests = requests.persist()
-    nodes = M.build_nodes(spark, transcripts, ent_nodes, first_def, requests, pack)
-    edges = M.build_edges(spark, transcripts, resolved, ent_nodes, first_def, requests, pack)
+    nodes = M.local_nodes(spark, transcripts, requests).unionByName(
+        M.global_nodes(spark, facts, ent_nodes, first_def, pack)
+    )
+    edges = M.local_edges(facts).unionByName(M.global_edges(spark, facts, first_def, pack))
     if persist_intermediates:
         # The query surface re-reads nodes/edges many times (set ops
         # scan the edge union twice per call); pin the materialized

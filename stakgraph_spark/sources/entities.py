@@ -151,6 +151,11 @@ def _sql_lit(v, typ: str = "STRING") -> str:
     return f"CAST({v} AS INT)"
 
 
+def _map_sql(d: dict) -> str:
+    """A map literal (constant-folded by Catalyst into one Literal)."""
+    return "map(" + ", ".join(f"{_sql_lit(k)}, {_sql_lit(v)}" for k, v in sorted(d.items())) + ")"
+
+
 def _values_df(
     spark: SparkSession, rows: list[tuple], cols: list[str], types: list[str] | None = None
 ) -> DataFrame:

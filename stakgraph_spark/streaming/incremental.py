@@ -140,8 +140,9 @@ class ResumableBuilder:
         g_fp = self._fingerprint(transcripts)
         if done.get("globals") != g_fp:
             t0 = time.time()
-            g_nodes = M.global_nodes(spark, transcripts, ent_nodes, first_def)
-            g_edges = M.global_edges(spark, M.turn_facts(transcripts), first_def)
+            facts = M.turn_facts(transcripts)
+            g_nodes = M.global_nodes(spark, facts, ent_nodes, first_def)
+            g_edges = M.global_edges(spark, facts, first_def)
             n_n, n_e = self._write_unit("globals", g_nodes, g_edges)
             self._record(spark, "globals", g_fp, n_n, n_e, time.time() - t0)
             units_done += 1
@@ -157,8 +158,9 @@ class ResumableBuilder:
             if done.get(unit) == fp:
                 continue
             t0 = time.time()
-            nodes = M.local_nodes(spark, sub, X.extract_requests(sub))
-            edges = M.local_edges(M.turn_facts(sub))
+            facts = M.turn_facts(sub)
+            nodes = M.local_nodes(spark, sub, M.request_rows(facts))
+            edges = M.local_edges(facts)
             n_n, n_e = self._write_unit(unit, nodes, edges)
             self._record(spark, unit, fp, n_n, n_e, time.time() - t0)
             units_done += 1

@@ -1,9 +1,11 @@
 """Per-turn collection + tiered var-usage + return-type linking
-(reference collect.rs:40-59; format.rs:561-617, 621-644)."""
+(reference collect.rs:40-59; format.rs:561-617, 621-644), read from
+the build's per-turn fact table."""
 
 import pyspark.sql.functions as F
 
 from stakgraph_spark.operators import collect as C
+from stakgraph_spark.operators import materialize as M
 from stakgraph_spark.plans.pipeline import build_from_sf_dir
 from tests.conftest import SF_MID, SF_SMALL
 
@@ -18,12 +20,13 @@ def _planted(spark):
 
 def test_candidate_extraction_is_dictionary_free(spark):
     got = {
-        (r["turn_idx"], r["name"])
-        for r in C.extract_entity_candidates(_planted(spark)).collect()
+        (r["turn_id"], r["name"])
+        for r in M.collect_rows(_planted(spark)).where("kind = 'candidate'").collect()
     }
     # CamelCase-with-interior-cap only: verbs/bare caps (GET, T99,
-    # T100, T3) and lowercase text never match; unknown entities
-    # (none here) would still be extracted.
+    # T100, T3) and lowercase text never match. The regex needs no
+    # dictionary; the fact table then keeps the candidates that name
+    # a dictionary entity, which all six here do.
     assert got == {
         (0, "AuthCore"), (0, "OrderService"), (1, "DataModelX"),
         (3, "QueueWorker"), (5, "BillingCore"), (5, "InvoiceParser"),
@@ -32,10 +35,23 @@ def test_candidate_extraction_is_dictionary_free(spark):
 
 def test_var_tiers_on_planted_turns(spark):
     tdf = _planted(spark)
-    defs = {tuple(r) for r in C.bucket_first_var_defs(tdf).collect()}
+    facts = M.turn_facts(tdf)
+    picks = M.global_picks(facts, handlers=False)
+    defs = {
+        tuple(r)
+        for r in picks.where("kind = 'var'").selectExpr("name", "lo.conv_id", "lo.turn_idx").collect()
+    }
     # bucket-first pick: conv c0's turn 4 beats conv c1's turn 1
     assert defs == {("q_search", "bucketA_c0", 4)}
-    uses = {tuple(r) for r in C.var_usage_edges_extracted(tdf).collect()}
+    from stakgraph_spark.operators.extract import first_test_defs
+
+    uses = {
+        tuple(r)
+        for r in M.linked_refs(facts, first_test_defs(tdf), picks)
+        .where("kind = 'var'")
+        .select("conv_id", "turn_idx", "name", "d_conv", "d_turn")
+        .collect()
+    }
     # turn 4 accepts by tier 1 (same conversation), turn 1 by tier 3
     # (same bucket, different conversation)
     assert uses == {
@@ -45,9 +61,12 @@ def test_var_tiers_on_planted_turns(spark):
 
 
 def test_return_type_only_datamodels(spark):
-    from stakgraph_spark.operators.materialize import entity_nodes
-
-    got = {tuple(r) for r in C.return_type_datamodels(_planted(spark), entity_nodes(spark)).collect()}
+    got = {
+        tuple(r)
+        for r in M.turn_facts(_planted(spark))
+        .selectExpr("conv_id", "turn_idx", "explode(dm_keys) AS dm_key")
+        .collect()
+    }
     # DataModelX (turn 1's return section) resolves; BillingCore /
     # InvoiceParser in turn 5's return section are Classes, T3/T100
     # are unknown — none emit (format.rs:636 accepts DataModel only)
@@ -111,12 +130,11 @@ def test_candidate_uses_covers_case_variant_entities(spark):
     )
     # more USES targets AuthCore than lowercase-mention resolution
     # alone produces: every candidate turn is in
-    from stakgraph_spark.sources.entities import entities_df
     from stakgraph_spark.sources.transcripts import read_transcripts
 
     cand_turns = (
-        C.typed_entity_candidates(read_transcripts(spark, SF_SMALL), entities_df(spark))
-        .where("name = 'AuthCore'")
+        M.collect_rows(read_transcripts(spark, SF_SMALL))
+        .where("kind = 'candidate' AND name = 'AuthCore'")
         .count()
     )
     assert cand_turns > 0

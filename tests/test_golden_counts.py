@@ -159,23 +159,19 @@ def test_edge_dedup_invariant(spark):
     assert e.count() == e.dropDuplicates(["edge_type", "source_key", "target_key"]).count()
 
 
-def test_fact_table_resolution_equals_link_mentions(spark):
-    """The build resolves mentions inside the per-turn fact table
-    (map literals + one conv_id window); the query surface's
-    link_mentions (broadcast joins + struct-max aggregate) is the
-    reference: the same (conv, turn, entity) set."""
-    from stakgraph_spark.operators.extract import extract_mentions_raw
-    from stakgraph_spark.operators.link import link_mentions
-    from stakgraph_spark.operators.materialize import turn_facts
+def test_fact_table_resolution_equals_oracle(spark, duck_mid):
+    """build_graph's resolved mentions — the fact table's resolutions
+    (link.resolve_sql: map literals + one conv_id window), with the
+    tier score — equal the DuckDB kg_resolved oracle (dictionary
+    joins + a row_number pick) on sf0.01."""
+    import __spark_entry__ as ENTRY
+    from stakgraph_spark.plans.pipeline import build_graph
 
-    t = read_transcripts(spark, SF_MID)
-    want = {
-        (r["conv_id"], r["turn_idx"], r["entity_id"])
-        for r in link_mentions(spark, extract_mentions_raw(t)).collect()
-    }
-    got = {
-        (r["conv_id"], r["turn_idx"], e)
-        for r in turn_facts(t).select("conv_id", "turn_idx", "ents").collect()
-        for e in r["ents"]
-    }
-    assert want and got == want
+    cols = ["conv_id", "turn_idx", "surface", "entity_id", "score"]
+    got = [
+        tuple(r)
+        for r in build_graph(spark, read_transcripts(spark, SF_MID))["resolved"].select(*cols).collect()
+    ]
+    want = [tuple(r) for r in duck_mid.execute(ENTRY.oracle_sql()["kg_resolved"]).fetchall()]
+    assert want and sorted(got) == sorted(want)
+    assert {r[4] for r in want} == {1, 2, 3}
