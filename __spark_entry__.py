@@ -276,15 +276,18 @@ def _q_uncovered(spark, sf_dir):
 
 def _q_subtree(spark, sf_dir):
     """Depth-bounded BFS expansion plus — round-5 tagged arm — the
-    distributed shortest path (queries.ts:519-548, previously
-    pytest-only): min-parent BFS from the repository root to the
-    planted OrderService class over undirected traversal edges, the
-    reconstructed path re-emitted as (step index, node_key) rows."""
+    shortest path (queries.ts:519-548, previously pytest-only):
+    min-parent BFS from the repository root to the planted
+    OrderService class over undirected traversal edges, the
+    reconstructed path re-emitted as (step index, node_key) rows.
+    Roots and path rows are VALUES relations: reading them runs no
+    job."""
     from stakgraph_spark.operators.materialize import REPO_KEY
     from stakgraph_spark.operators.queryops import shortest_path, subtree
+    from stakgraph_spark.sources.entities import _values_df
 
     g = _graph(spark, sf_dir)
-    roots = spark.createDataFrame([(REPO_KEY,)], "node_key STRING")
+    roots = _values_df(spark, [(REPO_KEY,)], ["node_key"])
     st = subtree(g["edges"], roots, depth=3, edge_types=("CONTAINS",)).selectExpr(
         "'subtree' AS kind", "node_key", "CAST(depth AS INT) AS depth"
     )
@@ -293,7 +296,7 @@ def _q_subtree(spark, sf_dir):
         max_depth=6, edge_types=PATH_EDGE_TYPES,
     )
     rows = [("path", k, i) for i, k in enumerate(path or [])]
-    pdf = spark.createDataFrame(rows, "kind STRING, node_key STRING, depth INT")
+    pdf = _values_df(spark, rows, ["kind", "node_key", "depth"], ["STRING", "STRING", "INT"])
     return st.unionByName(pdf)
 
 

@@ -6,19 +6,29 @@ MCP/REST query operators (mcp/src/graph/queries.ts, SURVEY.md
 §2.12): point lookups, substring/suffix predicates, edge-type
 projections, counts, existence, latest-N-per-label windows,
 pagination, fulltext-ish search, coverage stats, depth-bounded
-subtree expansion (apoc.path.expandConfig analog, queries.ts:328-458)
-and shortest path (queries.ts:519-548).
+subtree expansion (apoc.path.expandConfig analog, queries.ts:328-458),
+the repo map (graph.ts:210-278) and shortest path (queries.ts:519-548).
 
-All are DataFrame plans over the materialized nodes/edges tables.
-Recursive pieces (BFS, shortest path) are bounded driver loops of
-hash joins — Catalyst has no recursion; each frontier hop is one
-equi-join on a key that is bucketable at scale.
+Lookups, search and aggregates are DataFrame plans over the
+materialized nodes/edges tables. The traversals (subtree, repo map,
+shortest path) keep the frontier and the visited set on the driver:
+a frontier is tens to thousands of keys the driver already holds
+exactly, so each hop is one action, the edges filtered by the
+frontier as one SQL IN-list and collected. No join, no exchange, no
+count() to size a broadcast. The bound is the driver's memory: the
+visited set must fit there, as it had to when it was broadcast.
+Spark 4.1's WITH RECURSIVE was measured and not used: a depth-2
+subtree still took 13 jobs, and a recursive CTE may not contain
+UNION (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so a path walk cannot
+recurse over distinct (node, depth) pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from stakgraph_spark.sources.entities import _sql_lit, _values_df
 
 
 # ---------------------------------------------------------------------------
@@ -135,15 +145,11 @@ def count_edges_of_type(edges: DataFrame) -> DataFrame:
 
 
 def has_edge(edges: DataFrame, source_key: str, target_key: str, edge_type: str) -> bool:
-    """array_graph.rs:736-746 — existence via limit(1)."""
-    return (
-        edges.where(
-            (F.col("source_key") == source_key)
-            & (F.col("target_key") == target_key)
-            & (F.col("edge_type") == edge_type)
-        ).limit(1).count()
-        > 0
-    )
+    """array_graph.rs:736-746 — existence: one filter, one isEmpty."""
+    return not edges.where(
+        f"source_key = {_sql_lit(source_key)} AND target_key = {_sql_lit(target_key)}"
+        f" AND edge_type = {_sql_lit(edge_type)}"
+    ).isEmpty()
 
 
 # ---------------------------------------------------------------------------
@@ -336,22 +342,24 @@ def token_census(nodes: DataFrame) -> DataFrame:
 
 def coverage_stats(nodes: DataFrame, edges: DataFrame, target_type: str = "Class") -> DataFrame:
     """covered = target nodes referenced by >=1 USES/CALLS edge;
-    stat = (total, covered, percent). countDistinct is exact here;
-    approx_count_distinct is the stated fallback at 10^12 scale."""
-    targets = nodes.where(F.col("node_type") == target_type).select("node_key")
-    covered = (
-        edges.where(F.col("edge_type").isin("USES", "CALLS"))
-        .select(F.col("target_key").alias("node_key"))
-        .join(targets, "node_key", "left_semi")
+    stat = (total, covered, percent). One plan: the target nodes left
+    joined to the distinct referenced keys, then one aggregate."""
+    hits = (
+        edges.where("edge_type IN ('USES', 'CALLS')")
+        .selectExpr("target_key AS node_key", "1 AS hit")
         .distinct()
     )
-    total = targets.agg(F.count("*").alias("total"))
-    cov = covered.agg(F.count("*").alias("covered"))
-    return total.crossJoin(cov).select(
-        F.lit(target_type).alias("target_type"),
-        F.col("total").cast("bigint").alias("total"),
-        F.col("covered").cast("bigint").alias("covered"),
-        F.round(F.col("covered") * 100.0 / F.col("total"), 2).alias("percent"),
+    return (
+        nodes.where(F.col("node_type") == target_type)
+        .select("node_key")
+        .join(hits, "node_key", "left")
+        .agg(F.count("*").alias("total"), F.count("hit").alias("covered"))
+        .select(
+            F.lit(target_type).alias("target_type"),
+            F.col("total").cast("bigint").alias("total"),
+            F.col("covered").cast("bigint").alias("covered"),
+            F.round(F.col("covered") * 100.0 / F.col("total"), 2).alias("percent"),
+        )
     )
 
 
@@ -367,15 +375,17 @@ def list_uncovered(nodes: DataFrame, edges: DataFrame, target_type: str = "Class
 
 
 # ---------------------------------------------------------------------------
-# Iterative graph traversal (no Catalyst recursion)
+# Traversal: the frontier lives on the driver, one filter-scan job per hop
 # ---------------------------------------------------------------------------
 
 TRAVERSAL_EDGE_TYPES = ("RENDERS", "CALLS", "CONTAINS", "HANDLER", "OPERAND")
 
-# Above this many keys a traversal frontier/visited set is no longer
-# broadcast (driver/executor memory), and the hop becomes a shuffle
-# join on the (bucketable) edge source key.
-BROADCAST_FRONTIER_MAX = 2_000_000
+
+def _in(col: str, keys) -> str:
+    """SQL `col IN (...)` over driver-side keys: one expression string,
+    so one py4j call however many keys (Column.isin makes one per key;
+    Catalyst turns a long IN-list into one hash-set lookup)."""
+    return f"{col} IN ({', '.join(map(_sql_lit, keys))})"
 
 
 def subtree(
@@ -386,54 +396,28 @@ def subtree(
     direction: str = "down",
 ) -> DataFrame:
     """Depth-bounded BFS expansion (queries.ts:328-458
-    apoc.path.expandConfig analog): iterative frontier joins with a
-    visited-set anti-join; returns (node_key, depth) with the MINIMUM
-    depth each node is first reached at.
+    apoc.path.expandConfig analog): returns (node_key, depth) with the
+    MINIMUM depth each node is first reached at.
 
-    root_keys: DataFrame with column node_key.
-    Each hop is one equi-join on the frontier key + one aggregate;
-    localCheckpoint per hop cuts lineage so depth-d plans stay O(1).
+    root_keys: DataFrame with column node_key, collected once. The
+    visited set is a driver dict (key -> depth); each hop is one job,
+    the edges filtered by the frontier as one IN-list and collected,
+    so depth d costs at most d + 1 jobs. The result is a local
+    relation (no job to read it). Bound: the visited set must fit on
+    the driver, as a broadcast frontier had to.
     """
-    e = edges.where(F.col("edge_type").isin(*edge_types))
-    if direction == "down":
-        e = e.select(F.col("source_key").alias("src"), F.col("target_key").alias("dst"))
-    else:
-        e = e.select(F.col("target_key").alias("src"), F.col("source_key").alias("dst"))
-
-    visited = root_keys.select("node_key").distinct().withColumn("depth", F.lit(0))
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited
-    frontier_n = visited_n = visited.count()
+    src, dst = ("source_key", "target_key") if direction == "down" else ("target_key", "source_key")
+    seen = dict.fromkeys((r[0] for r in root_keys.select("node_key").collect()), 0)
+    frontier = set(seen)
     for d in range(1, depth + 1):
-        # Broadcast the frontier/visited sets only while they are
-    	# small (they start as python-list-backed DataFrames with
-        # unknown 8 EiB stats, so the hint is needed for the planner
-        # to pick the right side). Past the threshold — e.g. a
-        # CONTAINS expansion from the root, whose frontier IS the
-        # node set — broadcasting would OOM the driver at scale, so
-        # the hop falls back to a shuffle join on src (the edge table
-        # is bucketable by source_key at rest).
-        f = frontier.select(F.col("node_key").alias("src"))
-        v = visited.select("node_key")
-        if frontier_n <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if visited_n <= BROADCAST_FRONTIER_MAX:
-            v = F.broadcast(v)
-        nxt = (
-            e.join(f, "src")
-            .select(F.col("dst").alias("node_key"))
-            .distinct()
-            .join(v, "node_key", "left_anti")
-            .withColumn("depth", F.lit(d))
-        )
-        nxt = nxt.localCheckpoint(eager=True)
-        frontier_n = nxt.count()
-        if frontier_n == 0:
+        if not frontier:
             break
-        visited = visited.unionByName(nxt)
-        visited_n += frontier_n
-        frontier = nxt
-    return visited
+        hop = edges.where(f"{_in('edge_type', edge_types)} AND {_in(src, frontier)}")
+        frontier = {r[0] for r in hop.select(dst).collect()} - seen.keys()
+        seen.update(dict.fromkeys(frontier, d))
+    return _values_df(
+        edges.sparkSession, list(seen.items()), ["node_key", "depth"], ["STRING", "INT"]
+    )
 
 
 def repo_map(
@@ -448,44 +432,52 @@ def repo_map(
 
     Returns (path, line): `path` is the /-joined name path (sorting
     by it yields the tree's display order); `line` is the indented
-    'name (tokens)' row. CONTAINS is a forest (every node has one
-    container), so no visited set is needed.
+    'name (tokens)' row. A node without a nodes row is dropped with
+    its subtree.
+
+    One job per hop collects the CONTAINS edges out of the frontier
+    (one IN-list), then one job reads name and tokens of every
+    reached node: at most depth + 1 jobs. Bound: the reached nodes
+    must fit on the driver.
     """
-    e = edges.where(F.col("edge_type") == "CONTAINS").select(
-        F.col("source_key").alias("src"), F.col("target_key").alias("dst")
-    )
-    info = nodes.selectExpr(
-        "node_key", "name", f"CAST({TOKENS_SPARK} AS BIGINT) AS tokens"
-    )
-    cur = (
-        info.where(F.col("node_key") == root_key)
-        .selectExpr("node_key", "name AS path", "name", "tokens")
-    ).localCheckpoint(eager=True)
-    out = cur
-    cur_n = cur.count()
-    for _ in range(1, depth + 1):
-        if cur_n == 0:
+    hops, frontier = [], {root_key}
+    for _ in range(depth):
+        if not frontier:
             break
-        # The depth-1 frontier (directories) is tiny, but depth 2-3 is
-        # every conversation File / every turn Function — at corpus
-        # scale that frontier IS the node set, and broadcasting it
-        # each hop would OOM. Gate exactly as subtree() does: small
-        # frontier -> broadcast; past BROADCAST_FRONTIER_MAX the hop
-        # becomes a shuffle join on src (edges bucketable by
-        # source_key at rest).
-        f = cur.select(F.col("node_key").alias("src"), F.col("path").alias("ppath"))
-        if cur_n <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        cur = (
-            e.join(f, "src")
-            .join(info, e["dst"] == info["node_key"])
-            .selectExpr("node_key", "ppath || '/' || name AS path", "name", "tokens")
-        ).localCheckpoint(eager=True)
-        cur_n = cur.count()
-        if cur_n == 0:
-            break
-        out = out.unionByName(cur)
-    return out.selectExpr(
+        rows = (
+            edges.where(f"edge_type = 'CONTAINS' AND {_in('source_key', frontier)}")
+            .select("source_key", "target_key")
+            .collect()
+        )
+        hops.append(rows)
+        frontier = {t for _, t in rows}
+    reached = {root_key}.union(*({t for _, t in rows} for rows in hops))
+    info = {
+        k: (name, tokens)
+        for k, name, tokens in nodes.where(_in("node_key", reached))
+        .selectExpr("node_key", "name", f"CAST({TOKENS_SPARK} AS BIGINT)")
+        .collect()
+    }
+
+    def child(key, ppath):
+        name = info[key][0]
+        # Spark's || is NULL when either side is
+        return key, None if ppath is None or name is None else f"{ppath}/{name}"
+
+    level = [(root_key, info[root_key][0])] if root_key in info else []
+    out = list(level)
+    for rows in hops:
+        kids: dict[str, list[str]] = {}
+        for s, t in rows:
+            kids.setdefault(s, []).append(t)
+        level = [child(t, path) for k, path in level for t in kids.get(k, ()) if t in info]
+        out.extend(level)
+    return _values_df(
+        edges.sparkSession,
+        [(path, *info[k]) for k, path in out],
+        ["path", "name", "tokens"],
+        ["STRING", "STRING", "BIGINT"],
+    ).selectExpr(
         "path",
         # indent = tree depth = number of '/' in the path
         "repeat('  ', CAST(length(path) - length(replace(path, '/', '')) AS INT))"
@@ -497,61 +489,37 @@ def shortest_path(
     edges: DataFrame, from_key: str, to_key: str, max_depth: int = 10,
     edge_types: tuple[str, ...] | None = None,
 ) -> list[str] | None:
-    """queries.ts:519-548 — BFS with parent tracking. Parents stay in
-    a DISTRIBUTED (node_key, parent) DataFrame throughout — nothing
-    frontier-sized is ever collected to the driver (a large component
-    would OOM it); the only driver-side transfers are a limit(1)
-    target probe per hop and, after the target is reached, one
-    single-row lookup per path step during reconstruction (bounded by
-    max_depth). Frontier/visited broadcasts are gated by
-    BROADCAST_FRONTIER_MAX exactly as in subtree(). Returns the
-    node_key path or None."""
-    e = edges
-    if edge_types:
-        e = e.where(F.col("edge_type").isin(*edge_types))
-    # undirected expansion, as apoc shortestPath treats relationships
-    sym = e.select(F.col("source_key").alias("src"), F.col("target_key").alias("dst")).unionByName(
-        e.select(F.col("target_key").alias("src"), F.col("source_key").alias("dst"))
-    )
-    spark = edges.sparkSession
-    visited = spark.sql(
-        "SELECT node_key, parent FROM VALUES ('"
-        + from_key.replace("'", "''")
-        + "', CAST(NULL AS STRING)) AS t(node_key, parent)"
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    frontier_n = visited_n = 1
-    found = from_key == to_key
+    """queries.ts:519-548 — BFS over the undirected edges with parent
+    tracking. Returns the node_key path or None.
+
+    The parents live in a driver dict. Each hop is one job: the edges
+    with either end in the frontier (one IN-list per side), collected;
+    a newly reached node's parent is the smallest frontier key
+    adjacent to it, so the path is deterministic. A path of n hops
+    costs at most n jobs. Bound: the visited set must fit on the
+    driver, as a broadcast frontier had to.
+    """
+    types = f"{_in('edge_type', edge_types)} AND " if edge_types else ""
+    parent: dict[str, str | None] = {from_key: None}
+    frontier = {from_key}
     for _ in range(max_depth):
-        if found:
+        if to_key in parent:
             break
-        f = frontier.select(F.col("node_key").alias("src"))
-        v = visited.select("node_key")
-        if frontier_n <= BROADCAST_FRONTIER_MAX:
-            f = F.broadcast(f)
-        if visited_n <= BROADCAST_FRONTIER_MAX:
-            v = F.broadcast(v)
-        nxt = (
-            sym.join(f, "src")
-            .groupBy(F.col("dst").alias("node_key"))
-            .agg(F.min("src").alias("parent"))  # deterministic parent pick
-            .join(v, "node_key", "left_anti")
-            .localCheckpoint(eager=True)
+        hop = edges.where(
+            f"{types}({_in('source_key', frontier)} OR {_in('target_key', frontier)})"
         )
-        frontier_n = nxt.count()
-        if frontier_n == 0:
+        nxt: dict[str, str] = {}
+        for s, t in hop.select("source_key", "target_key").collect():
+            for a, b in ((s, t), (t, s)):
+                if a in frontier and b not in parent and (b not in nxt or a < nxt[b]):
+                    nxt[b] = a
+        if not nxt:
             return None
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        visited_n += frontier_n
-        frontier = nxt
-        found = nxt.where(F.col("node_key") == to_key).limit(1).count() > 0
-    if not found:
+        parent.update(nxt)
+        frontier = set(nxt)
+    if to_key not in parent:
         return None
-    # Path reconstruction: one 1-row point lookup per step against the
-    # distributed parent table (<= max_depth lookups, each a
-    # key-predicate scan — an index/bucket probe at rest).
     path = [to_key]
     while path[-1] != from_key:
-        row = visited.where(F.col("node_key") == path[-1]).select("parent").first()
-        path.append(row["parent"])
+        path.append(parent[path[-1]])
     return list(reversed(path))

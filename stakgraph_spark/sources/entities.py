@@ -159,11 +159,15 @@ def _map_sql(d: dict) -> str:
 def _values_df(
     spark: SparkSession, rows: list[tuple], cols: list[str], types: list[str] | None = None
 ) -> DataFrame:
+    """A local relation (VALUES literals: exact stats, no job to read).
+    No rows: one typed NULL row under LIMIT 0, as VALUES needs one."""
     types = types or ["STRING"] * len(cols)
     vals = ", ".join(
-        "(" + ", ".join(_sql_lit(v, t) for v, t in zip(r, types)) + ")" for r in rows
+        "(" + ", ".join(_sql_lit(v, t) for v, t in zip(r, types)) + ")"
+        for r in rows or [(None,) * len(cols)]
     )
-    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({', '.join(cols)})")
+    sql = f"SELECT * FROM VALUES {vals} AS t({', '.join(cols)})"
+    return spark.sql(sql if rows else sql + " LIMIT 0")
 
 
 def entities_df(spark: SparkSession) -> DataFrame:

@@ -1,7 +1,7 @@
 """Round-3 query-surface hardening: keyset pagination, body-posting
-stopword cap, and the broadcast-gate fallbacks of repo_map /
-shortest_path (round-2 VERDICT 'What's wrong' #2/#3 — correct at
-sf0.1, scale-killers unguarded)."""
+stopword cap, embeddings, and the driver-frontier traversals
+(subtree / shortest_path / has_edge) against a plain-Python BFS and
+the DuckDB recursive CTE."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -104,20 +104,6 @@ def test_token_index_body_df_cap(spark):
     full.unpersist()
 
 
-def test_repo_map_shuffle_fallback_equals_broadcast_path(spark, monkeypatch):
-    """Force the frontier gate to trip on every hop: the shuffle-join
-    fallback must produce the identical map."""
-    g = _g(spark)
-    want = sorted(
-        tuple(r) for r in Q.repo_map(g["nodes"], g["edges"], REPO_KEY, depth=2).collect()
-    )
-    monkeypatch.setattr(Q, "BROADCAST_FRONTIER_MAX", 0)
-    got = sorted(
-        tuple(r) for r in Q.repo_map(g["nodes"], g["edges"], REPO_KEY, depth=2).collect()
-    )
-    assert got == want and len(want) > 0
-
-
 def test_attach_embeddings(spark):
     """Node-attached embeddings: vectors land ordered by dim on
     matching nodes, NULL elsewhere, row count preserved."""
@@ -151,7 +137,7 @@ def test_attach_embeddings(spark):
     assert list(vec) == [flat[d] for d in sorted(flat)]
 
 
-def test_shortest_path_distributed_parents(spark, monkeypatch):
+def test_shortest_path_reaches_and_rejects(spark):
     g = _g(spark)
     e = g["edges"]
     turn_key = (
@@ -165,9 +151,102 @@ def test_shortest_path_distributed_parents(spark, monkeypatch):
     }
     for a, b in zip(path, path[1:]):
         assert (a, b) in epairs or (b, a) in epairs
-    # identical result when every broadcast gate trips (pure shuffle path)
-    monkeypatch.setattr(Q, "BROADCAST_FRONTIER_MAX", 0)
-    assert Q.shortest_path(e, REPO_KEY, turn_key, max_depth=5) == path
     # unreachable + self cases
     assert Q.shortest_path(e, REPO_KEY, "no-such-node", max_depth=3) is None
     assert Q.shortest_path(e, REPO_KEY, REPO_KEY) == [REPO_KEY]
+
+
+# Keys that need escaping in a SQL string literal (quote, backslash)
+# and a '/' (the repo map's path separator).
+_ODD_EDGES = [
+    ("CONTAINS", "root", "a'b"),
+    ("CONTAINS", "root", "c\\d"),
+    ("CONTAINS", "a'b", "e/f"),
+    ("CONTAINS", "c\\d", "e/f"),  # e/f has two parents at depth 1: the min wins
+    ("CONTAINS", "e/f", "g'\\/h"),
+    ("CALLS", "g'\\/h", "root"),  # a cycle back to the root
+    ("CALLS", "e/f", "x"),
+    ("USES", "x", "y''"),
+    ("CONTAINS", "z", "root"),
+]
+_ODD_KEYS = sorted({k for _, s, t in _ODD_EDGES for k in (s, t)})
+
+
+def _py_subtree(edges, root, depth, types, direction):
+    adj: dict = {}
+    for t, s, d in edges:
+        if t in types:
+            a, b = (s, d) if direction == "down" else (d, s)
+            adj.setdefault(a, set()).add(b)
+    seen, frontier = {root: 0}, {root}
+    for d in range(1, depth + 1):
+        frontier = {b for a in frontier for b in adj.get(a, ())} - seen.keys()
+        seen.update(dict.fromkeys(frontier, d))
+    return seen
+
+
+def _py_path(edges, src, dst, max_depth, types):
+    adj: dict = {}
+    for t, s, d in edges:
+        if types is None or t in types:
+            adj.setdefault(s, set()).add(d)
+            adj.setdefault(d, set()).add(s)
+    parent, frontier = {src: None}, {src}
+    for _ in range(max_depth):
+        if dst in parent:
+            break
+        nxt: dict = {}
+        for a in frontier:
+            for b in adj.get(a, ()):
+                if b not in parent and (b not in nxt or a < nxt[b]):
+                    nxt[b] = a
+        if not nxt:
+            return None
+        parent.update(nxt)
+        frontier = set(nxt)
+    if dst not in parent:
+        return None
+    path = [dst]
+    while path[-1] != src:
+        path.append(parent[path[-1]])
+    return path[::-1]
+
+
+def test_traversals_equal_python_bfs_on_quoted_keys(spark):
+    from stakgraph_spark.sources.entities import _values_df
+
+    e = spark.createDataFrame(
+        _ODD_EDGES, "edge_type STRING, source_key STRING, target_key STRING"
+    ).persist()
+    try:
+        e.count()
+        for types in (("CONTAINS",), ("CONTAINS", "CALLS", "USES")):
+            for direction in ("down", "up"):
+                for root in _ODD_KEYS:
+                    roots = _values_df(spark, [(root,)], ["node_key"])
+                    got = Q.subtree(e, roots, 3, types, direction).collect()
+                    assert dict(tuple(r) for r in got) == _py_subtree(
+                        _ODD_EDGES, root, 3, types, direction
+                    ), (types, direction, root)
+        for types in (None, ("CONTAINS",)):
+            for src in ("root", "y''"):
+                for dst in _ODD_KEYS:
+                    assert Q.shortest_path(e, src, dst, 4, types) == _py_path(
+                        _ODD_EDGES, src, dst, 4, types
+                    ), (types, src, dst)
+        assert Q.shortest_path(e, "root", "e/f") == ["root", "a'b", "e/f"]
+        for t, s, d in _ODD_EDGES:
+            assert Q.has_edge(e, s, d, t)
+            assert not Q.has_edge(e, d, s, t)
+    finally:
+        e.unpersist()
+
+
+def test_subtree_equals_duckdb_recursive_cte(spark, duck):
+    from stakgraph_spark.sources.entities import _values_df
+    from stakgraph_spark.sql.templates import subtree_sql
+
+    roots = _values_df(spark, [(REPO_KEY,)], ["node_key"])
+    got = {tuple(r) for r in Q.subtree(_g(spark)["edges"], roots, 3, ("CONTAINS",)).collect()}
+    want = {tuple(r) for r in duck.execute(subtree_sql(REPO_KEY, 3)).fetchall()}
+    assert got == want and len(want) > 100
