@@ -10,7 +10,7 @@ the same semantics — extraction -> entity linking -> canonicalization
 -> typed node/edge materialization -> graph query surface — as
 idiomatic Spark DataFrame plans over multi-turn transcript tables
 (conv_id, turn_idx, role, text, tool, ts), designed for a
-1000-executor cluster at 10^12-turn scale and tested on local[32].
+1000-executor cluster at 10^12-turn scale.
 
 Layout
 ------
@@ -20,8 +20,7 @@ Layout
                queries, dedup, similarity, text-stats
   plans/       the 5-superstage pipeline DAG (scaffold -> entities ->
                in-file relations -> resolution joins -> global linkers)
-  streaming/   incremental/resumable build (manifest checkpoints),
-               structured-streaming ingest
+  streaming/   incremental/resumable build (manifest checkpoints)
   sql/         dialect-portable SQL templates shared with the DuckDB
                oracle (correctness gate)
 """

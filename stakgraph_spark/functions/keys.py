@@ -4,8 +4,9 @@ Reproduces the reference's single most load-bearing function for
 output parity: ``create_node_key`` (reference ast/src/utils.rs:67-90)
 = ``sanitize(type)-sanitize(name)-sanitize(file)-sanitize(start)
 [-sanitize(verb)]`` where ``sanitize_string`` lowercases, trims, and
-strips all non-alphanumerics (ast/src/utils.rs:143-149). Edge
-identity is ``{src_key}-{dst_key}-{edge_type}``
+strips all non-alphanumerics (ast/src/utils.rs:143-149). An edge is
+identified by its (source_key, target_key, edge_type) columns, the
+parts of the reference's ``{src_key}-{dst_key}-{edge_type}``
 (ast/src/lang/graphs/array_graph.rs:775-781).
 
 Implemented as pure Column expressions (lower + regexp_replace +
@@ -37,11 +38,6 @@ def node_key(
     if verb is not None:
         parts.append(sanitize(verb))
     return F.concat_ws("-", *parts)
-
-
-def edge_key(source_key: Column, target_key: Column, edge_type: Column) -> Column:
-    """Edge identity `src-dst-type` (array_graph.rs:775-781)."""
-    return F.concat_ws("-", source_key, target_key, edge_type)
 
 
 def sanitize_py(value) -> str:

@@ -249,7 +249,6 @@ pack-parameterized differential gate (`kg_dialects`).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.paths import normalize_backend_path_sql
 from .extract import MENTION_RE, NUMSEG_RE, TESTREF_RE, TOOL_RE

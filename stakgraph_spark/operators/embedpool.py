@@ -83,15 +83,6 @@ def embed_chunks_vec(chunks: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
-def embed_chunks(chunks: DataFrame, dim: int = 16) -> DataFrame:
-    """embed_chunks_vec flattened to (doc_id, chunk_idx, dim, val) —
-    the hash-comparable form (array rendering differs across
-    engines; the flat form compares exactly)."""
-    return embed_chunks_vec(chunks, dim).selectExpr(
-        "label AS doc_id", "vec_id AS chunk_idx", "posexplode(embedding) AS (dim, val)"
-    )
-
-
 def weighted_pool(embeddings: DataFrame, first_weight: float = 1.2) -> DataFrame:
     """Pool member vectors per label into one L2-normalized vector;
     the first member (min vec_id) weighs `first_weight`

@@ -147,16 +147,3 @@ def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling: one output row per sampled frame index
-    (explode of the REAL decoded frame count — the avi arm's movi
-    chunks). A new container codec plugs in at decode_stub without
-    touching this plan."""
-    feats = extract_features(media)
-    return feats.selectExpr(
-        "doc_id",
-        "media_type",
-        f"explode(sequence(0, greatest(n_frames - 1, 0), {every_n})) AS frame_idx",
-    )

@@ -14,7 +14,6 @@ reference's nearest analogs: token_count per node body
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Tiny per-language stopword dictionaries (deterministic heuristic —
 # the plumbing is the point; swap in fasttext/cld3 packs as data).

@@ -7,7 +7,7 @@ entity set built by earlier stages). Planted structure, all
 deterministic, no external data:
 
   * a Zipf head (entity 0 appears in ~40% of mention turns) to
-    exercise skew salting,
+    exercise skew handling,
   * ambiguous aliases shared by 2+ entities ('core' -> {AuthCore,
     BillingCore}; 'ordersvc' -> {OrderService, MockOrderService}) to
     exercise the tiered resolution scorer,
@@ -138,17 +138,22 @@ def endpoint_name(verb: str, seg: str) -> str:
 # (b) LocalRelations broadcast without scheduling tasks.
 
 
+_INTEGRAL = ("TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT")
+
+
 def _sql_lit(v, typ: str = "STRING") -> str:
     """A Spark SQL literal: string, int, NULL of type `typ`, or an
     array of literals. Strings take backslash escapes (Spark SQL
-    concatenates adjacent literals, so '' is no escaped quote)."""
+    concatenates adjacent literals, so '' is no escaped quote). An
+    int is cast to `typ` when that is integral, else to INT (the
+    dims pass their int columns under the default STRING)."""
     if v is None:
         return f"CAST(NULL AS {typ})"
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (list, tuple)):
         return "array(" + ", ".join(_sql_lit(x) for x in v) + ")"
-    return f"CAST({v} AS INT)"
+    return f"CAST({v} AS {typ if typ.upper() in _INTEGRAL else 'INT'})"
 
 
 def _map_sql(d: dict) -> str:

@@ -31,9 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TRANSCRIPT_SCHEMA = "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP"
-
-
 def derive_transcripts(spark: SparkSession, events: DataFrame) -> DataFrame:
     """events -> transcripts, by executing the EXACT portable SQL the
     DuckDB oracle embeds (sql/templates.transcripts_query) — input

@@ -10,8 +10,6 @@ of the Arrow-batched UDF."""
 
 from __future__ import annotations
 
-import pytest
-
 from stakgraph_spark.functions.bpe import (
     GPT2_PRETOK,
     N_MERGES,

@@ -2,8 +2,6 @@
 (reference collect.rs:40-59; format.rs:561-617, 621-644), read from
 the build's per-turn fact table."""
 
-import pyspark.sql.functions as F
-
 from stakgraph_spark.operators import collect as C
 from stakgraph_spark.operators import materialize as M
 from stakgraph_spark.plans.pipeline import build_from_sf_dir

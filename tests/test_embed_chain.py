@@ -52,3 +52,44 @@ def test_embed_chunks_unit_norm_and_determinism(spark):
     assert abs(sum(v * v for v in out[1]) - 1.0) < 1e-4
     # sub-trigram chunk -> all-zero vector, not NaN
     assert out[2] == [0.0] * 16
+
+
+def test_chain_equals_duckdb_on_non_ascii_text(spark):
+    """chunk -> embed -> pool over accented Latin, CJK, single-codepoint
+    emoji and ZWJ sequences equals the DuckDB chain arm: both engines'
+    length/substring/ascii work on codepoints, including a chunk
+    boundary that cuts a ZWJ sequence and a 2-codepoint text (3 UTF-16
+    units) that both drop as too short."""
+    import duckdb
+
+    from stakgraph_spark.operators.embedpool import chunk_text, embed_chunks_vec, weighted_pool
+    from stakgraph_spark.sql.data_templates import weighted_pool_with_chain
+
+    docs = [
+        (1, "café résumé naïve Ångström straße Øresund"),
+        (2, "知识图谱构建在转录表上运行良好"),
+        (3, "launch 🚀 party 🎉 fire 🔥 done"),
+        (4, "family 👨‍👩‍👧 coder 👩‍💻 flag 🏳️‍🌈"),
+        (5, "é漢🚀👨‍👩‍👧 " * 60),  # 540 codepoints: chunk 400 ends inside a ZWJ sequence
+        (6, "🚀x"),
+        (7, "👨‍👩"),
+    ]
+    chunks = chunk_text(
+        spark.createDataFrame(docs, "doc_id BIGINT, text STRING").where("length(text) >= 3")
+    )
+    emb = embed_chunks_vec(chunks).selectExpr("CAST(label AS STRING) AS label", "vec_id", "embedding")
+    got = sorted(tuple(r) for r in weighted_pool(emb).collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    con.execute("CREATE TABLE embeddings (label VARCHAR, vec_id BIGINT, embedding DOUBLE[])")
+    want = sorted(
+        con.execute(
+            f"SELECT label, dim, pooled FROM ({weighted_pool_with_chain()}) WHERE arm = 'chain'"
+        ).fetchall()
+    )
+    con.close()
+
+    assert {r[0] for r in got} == {"1", "2", "3", "4", "5", "7"}
+    assert got == want

@@ -4,7 +4,6 @@ dialects (Spark SQL and DuckDB must agree with the Rust semantics
 and with each other)."""
 
 import duckdb
-import pytest
 
 from stakgraph_spark.functions.paths import (
     normalize_backend_path_sql,

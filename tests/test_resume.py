@@ -1,14 +1,13 @@
-"""Resume/idempotency + incremental update + streaming ingest —
+"""Resume/idempotency + incremental update —
 analogs of standalone/tests/graph_accuracy.rs (incremental equals
 full rebuild) and the repository-hash skip (handlers.rs:112-131)."""
 
-import os
 import tempfile
 
 import pandas as pd
 import pytest
 
-from stakgraph_spark.plans.pipeline import build_from_sf_dir, build_graph
+from stakgraph_spark.plans.pipeline import build_graph
 from stakgraph_spark.sources.transcripts import read_transcripts
 from stakgraph_spark.streaming.incremental import KillSwitch, ResumableBuilder
 from tests.conftest import SF_SMALL
@@ -83,25 +82,6 @@ def test_incremental_update_rebuilds_only_changed(spark):
     finally:
         b.destroy()
         tr.unpersist()
-
-
-def test_streaming_ingest_matches_batch(spark):
-    from stakgraph_spark.operators.extract import extract_mentions
-    from stakgraph_spark.streaming.stream import mentions_stream_query, read_transcript_stream
-
-    tr = read_transcripts(spark, SF_SMALL)
-    base = tempfile.mkdtemp(prefix="sg_stream_")
-    in_dir, out_dir, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
-    tr.write.mode("overwrite").parquet(in_dir)
-
-    q = mentions_stream_query(read_transcript_stream(spark, in_dir), out_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir).select("conv_id", "turn_idx", "surface").toPandas()
-    want = extract_mentions(tr).toPandas()
-    got = got.sort_values(list(got.columns)).reset_index(drop=True)
-    want = want.sort_values(list(want.columns)).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
 
 
 def test_incremental_update_moving_global_first_def(spark):

@@ -110,27 +110,6 @@ def test_canon_nonconvergence_raises(spark):
     assert {r["canon_id"] for r in labels.collect()} == {0}
 
 
-def test_salted_join_equals_plain_join(spark):
-    """Salting must be semantics-preserving: a hot-key join salted
-    16 ways returns exactly the plain join's rows."""
-    from stakgraph_spark.operators.skew import salted_count, salted_join
-
-    # 5000 rows, 90% sharing one hot key
-    left = spark.range(5000).selectExpr(
-        "id", "CASE WHEN id % 10 < 9 THEN 'hot' ELSE 'k' || CAST(id % 7 AS STRING) END AS k"
-    )
-    right = spark.createDataFrame(
-        [("hot", 1), ("k0", 2), ("k3", 3)], "k STRING, v INT"
-    )
-    plain = left.join(right, "k").selectExpr("k", "id", "v")
-    salted = salted_join(left, right, "k", salt_cols=["id"]).selectExpr("k", "id", "v")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-    counts = {r["k"]: r["n"] for r in salted_count(left, "k", ["id"]).collect()}
-    assert counts["hot"] == 4500
-
-
 def test_process_endpoint_groups_rewrite(spark):
     """array_graph.rs:187-228: grouped endpoints get the group
     prefix in their name AND a new node_key; edges referencing the

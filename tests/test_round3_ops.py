@@ -3,7 +3,6 @@ stopword cap, embeddings, and the driver-frontier traversals
 (subtree / shortest_path / has_edge) against a plain-Python BFS and
 the DuckDB recursive CTE."""
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from stakgraph_spark.operators import queryops as Q
